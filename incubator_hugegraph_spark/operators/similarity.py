@@ -92,6 +92,9 @@ def jaccard_top_batch(graph: PropertyGraph, sources: list[str], top: int,
     one set-oriented job (the REST endpoint's batch form; a per-source
     driver loop would serialize |sources| Spark jobs). Returns
     (source, id, jaccard). Same semantics as jaccard_top per source."""
+    # a repeated source would repeat its neighbor rows in src_n and
+    # double every intersection count (jaccard = 2.0); first-seen order
+    sources = list(dict.fromkeys(sources))
     if engine != "dist" and max_degree == NO_LIMIT:
         from incubator_hugegraph_spark.ram import (ram_fits,
                                                    ram_jaccard_top_batch)
@@ -160,17 +163,20 @@ def jaccard_top_batch(graph: PropertyGraph, sources: list[str], top: int,
           else src_n)
     inter = (nbr.join(sn, on=nbr.dst == src_n.n)
              .filter(F.col("src") != F.col("svi"))
-             .groupBy("source", F.col("src").alias("id"))
+             .groupBy("source", "svi", F.col("src").alias("id"))
              .agg(F.count(F.lit(1)).alias("inter")))
     # Only |sources| degree rows can ever match — semi-filter the O(|V|)
     # degree table down to the source list BEFORE broadcasting it
     # (round-2 verdict: broadcasting all of `sizes` ships every vertex's
-    # degree to every executor).
-    s_deg = (sizes.join(F.broadcast(sdf), on=sizes.src == sdf.svi)
-             .select("source", F.col("deg").alias("s_deg")))
+    # degree to every executor). The filter is keyed on svi, the encoded
+    # source id on the int tier (the source string on the string tier),
+    # so s_deg keeps one row per source and needs no source column.
+    s_deg = (sizes.join(F.broadcast(sdf), on=sizes.src == sdf.svi,
+                        how="left_semi")
+             .select(F.col("src").alias("svi"), F.col("deg").alias("s_deg")))
     scored = (inter
               .join(sizes.withColumnRenamed("src", "id"), on="id")
-              .join(F.broadcast(s_deg), on="source")
+              .join(F.broadcast(s_deg), on="svi")
               .select("source", "id",
                       F.round(F.col("inter")
                               / (F.col("deg") + F.col("s_deg")

@@ -506,7 +506,9 @@ def ram_jaccard_top_batch(graph: PropertyGraph, sources: list[str],
     out_src: list = []
     out_id: list = []
     out_jac: list = []
-    for s_str in sources:
+    # a repeated source answers once (first-seen order), as on the
+    # distributed tiers
+    for s_str in dict.fromkeys(sources):
         p = np.searchsorted(ids, s_str)
         if p >= n or ids[p] != s_str:
             continue

@@ -109,6 +109,20 @@ def test_jaccard_top_batch_filters_degree_before_broadcast(graph):
     assert "LeftSemi, BuildRight" in plan, plan
 
 
+def test_jaccard_top_batch_filters_degree_before_broadcast_string_tier(
+        graph, monkeypatch):
+    """The same source-degree semi-filter on the string-keyed tier
+    (|V| past BROADCAST_VERTEX_LIMIT), where svi is the source string."""
+    import incubator_hugegraph_spark.algorithms.pagerank as prmod
+    from incubator_hugegraph_spark.operators.similarity import (
+        jaccard_top_batch)
+    monkeypatch.setattr(prmod, "BROADCAST_VERTEX_LIMIT", 0)
+    df = jaccard_top_batch(graph, ["customer!1", "customer!2"], 5,
+                           engine="dist")
+    plan = _plan(df)
+    assert "LeftSemi, BuildRight" in plan, plan
+
+
 def test_pagerank_round_has_no_edge_shuffle(graph):
     """One pagerank message round over the dst-partitioned cached edge
     table: partial+final HashAggregate with NO shuffle exchange between

@@ -557,6 +557,30 @@ def test_jaccard_int_tier_matches_string_tier(graph, monkeypatch):
     assert b.exceptAll(a).count() == 0
 
 
+def test_jaccard_top_batch_duplicate_sources(graph, monkeypatch):
+    """A repeated source answers once, as if listed once, on the RAM
+    tier, the int-keyed dist tier and the string-keyed dist tier: a
+    duplicate must neither repeat rows nor double the intersection
+    counts (jaccard = |A∩B|/|A∪B| ≤ 1)."""
+    import incubator_hugegraph_spark.algorithms.pagerank as prmod
+    from incubator_hugegraph_spark.operators.similarity import (
+        jaccard_top_batch)
+
+    def rows(srcs, engine):
+        return sorted(map(tuple, jaccard_top_batch(
+            graph, srcs, 5, engine=engine).collect()))
+
+    int_tier = prmod.BROADCAST_VERTEX_LIMIT
+    for engine, vertex_limit in [("ram", int_tier), ("dist", int_tier),
+                                 ("dist", 0)]:
+        monkeypatch.setattr(prmod, "BROADCAST_VERTEX_LIMIT", vertex_limit)
+        once = rows(["customer!1"], engine)
+        twice = rows(["customer!1", "customer!1"], engine)
+        assert once, (engine, vertex_limit)
+        assert twice == once, (engine, vertex_limit, twice)
+        assert all(r[2] <= 1.0 for r in twice), (engine, vertex_limit)
+
+
 @pytest.mark.slow  # verify-budget tier (r11): see pytest.ini
 def test_ram_fusiform_matches_distributed(graph):
     """In-memory fusiform pair-count kernel equals the hub-split
