@@ -11,8 +11,10 @@ convergence: Σ|rank'' - rank| < precision, or max_times rounds.
 
 Spark shape per round: one broadcast-eligible join of the rank vector
 onto edges + one groupBy(dst) partial-aggregated sum — the classic DF
-PageRank. Rank vector is O(|V|) and localCheckpoint'ed; the edge table
-(with precomputed outdeg) is computed once and cached by the caller.
+PageRank, keyed by the graph's order-preserving vertex index (longs,
+encoded once per graph, see ``indexed``). Rank vector is O(|V|) and
+localCheckpoint'ed; the encoded edge table is computed once per call
+and cached.
 """
 
 from __future__ import annotations
@@ -61,12 +63,13 @@ def vector_partitions(n: int, spark) -> int:
 
 def vertex_index(graph: PropertyGraph) -> DataFrame:
     """ORDER-PRESERVING vertex index (id string → vi long),
-    checkpointed. The broadcast-tier iterative loops encode their
-    join/agg keys through this once and run every round on longs
-    (guide §2.3 narrower types: a LongHashedRelation probe + long-keyed
-    hash aggregation measured 1.76x faster per page_rank round than the
-    string-keyed shape at sf0.1 — see OPTIMIZATION_r11.md finding #9),
-    then decode once at the end.
+    checkpointed. page_rank, wcc and jaccard_top_batch encode their
+    join/agg keys through it and run on longs (guide §2.3 narrower
+    types: a LongHashedRelation probe + long-keyed hash aggregation
+    measured 1.76x faster per page_rank round than the string-keyed
+    shape at sf0.1 — see OPTIMIZATION_r11.md finding #9), then decode
+    once at the end. Built on a miss of the graph's memo only: callers
+    go through ``indexed``.
 
     Order preservation (range-partition → per-partition sort →
     monotonically_increasing_id: partition p's ids all sort before
@@ -75,13 +78,57 @@ def vertex_index(graph: PropertyGraph) -> DataFrame:
     over the original ids — wcc's component labels decode to the
     identical strings. The mapping is eagerly checkpointed so encode
     and decode read the SAME materialized assignment (mono ids are
-    order-dependent; a recompute could reassign)."""
+    order-dependent; a recompute could reassign). The range-partition
+    + sort needs no broadcast, so it builds at any |V|."""
     n = int(graph.spark.sparkContext.defaultParallelism)
     return checkpointed(
         graph.vertices.select("id")
         .repartitionByRange(n, "id")
         .sortWithinPartitions("id")
         .withColumn("vi", F.monotonically_increasing_id()))
+
+
+def indexed(graph: PropertyGraph) -> tuple[DataFrame, int]:
+    """(vertex index, |V|), built once per graph: memoized through
+    ``PropertyGraph.derived``, so ``vertex_index`` runs again only
+    after a write rebinds the graph's tables. |V| is the index's own
+    row count, so rank normalisation and the encoding agree."""
+    def build():
+        idx = vertex_index(graph)
+        return idx, idx.count()
+    return graph.derived("vertex_index", build)
+
+
+def encode_edges(graph: PropertyGraph, edges: DataFrame,
+                 bcast: bool) -> DataFrame:
+    """(src, dst) vertex ids → the index's longs. Inner joins: an edge
+    with an endpoint that is not a vertex is dropped, as the RAM
+    kernels drop it (ram._index_edges), so every tier sees the same
+    edge set. The index is broadcast under the vertex gate and
+    shuffle-joined past it."""
+    idx, _ = indexed(graph)
+
+    def side(col: str) -> DataFrame:
+        df = idx.withColumnRenamed("id", col)
+        return F.broadcast(df) if bcast else df
+    return (edges.join(side("src"), on="src")
+            .select(F.col("vi").alias("src"), "dst")
+            .join(side("dst"), on="dst")
+            .select("src", F.col("vi").alias("dst")))
+
+
+def decode_ids(graph: PropertyGraph, df: DataFrame, bcast: bool,
+               *cols: str) -> DataFrame:
+    """Map the encoded long columns ``cols`` of ``df`` back to vertex
+    ids (one join against the index per column; other columns and
+    the column order are kept)."""
+    idx, _ = indexed(graph)
+    for c in cols:
+        dec = idx.select(F.col("vi").alias(c), F.col("id").alias("__sid"))
+        df = (df.join(F.broadcast(dec) if bcast else dec, on=c)
+              .select(*[F.col("__sid").alias(x) if x == c else x
+                        for x in df.columns]))
+    return df
 
 
 def page_rank(graph: PropertyGraph, alpha: float = 0.15,
@@ -111,10 +158,10 @@ def page_rank(graph: PropertyGraph, alpha: float = 0.15,
     e0 = graph.adj(direction, labels).select("src", "dst")
     e0 = cap_degree(e0, max_degree, order_cols=("dst",))
 
-    n = graph.vertices.count()
+    idx, n = indexed(graph)
     # The rank vector is O(|V|): under BROADCAST_VERTEX_LIMIT vertices
     # it fits in a broadcast (~25 MB at 1M rows), turning every round
-    # into a map-side join against the checkpointed edge table — no
+    # into a map-side join against the cached edge table — no
     # rank-side shuffle. The broadcast is also re-collected to the
     # driver every round, so the limit is sized for the default 1 GB
     # driver heap; raise it only with more driver memory. Past the
@@ -125,66 +172,25 @@ def page_rank(graph: PropertyGraph, alpha: float = 0.15,
     def _r(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if bcast else df
 
-    # §2.3 narrower types (optimization r11, finding #9): on the
-    # broadcast tier the loop's only hot bytes are the join/agg keys —
-    # encode vertex ids to longs ONCE (two map-side broadcast joins
-    # folded into the edge cache's build), run every round with a
-    # LongHashedRelation probe + long-keyed aggregation (measured
-    # 1.76x faster per round than the string-keyed shape at sf0.1),
-    # decode ONCE at the end. CONVERGENCE PATH ONLY: regrouping the
-    # message sums by the encoded key reorders the float additions by
-    # ~1 ULP, fine for the convergence test and the count-shaped bench
-    # queries but not for the hash-gated fixed-rounds path, which
-    # keeps the string-keyed plan byte-identical. deg is computed from
-    # the RAW string edges so multi-edges to non-vertex endpoints
-    # count exactly as before (the encode's inner join would drop
-    # them; their messages were always discarded at the assembly join).
-    int_tier = bcast and fixed_rounds is None
-    if int_tier:
-        idx = vertex_index(graph)
-        deg0 = e0.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        e = balanced(
-            e0.join(F.broadcast(idx.withColumnRenamed("id", "src")),
-                    on="src")
-            .select(F.col("vi").alias("src"), "dst")
-            .join(F.broadcast(idx.withColumnRenamed("id", "dst")),
-                  on="dst")
-            .select("src", F.col("vi").alias("dst")),
-            "dst").persist()
-        ranks = checkpointed(
-            idx.join(deg0.withColumnRenamed("src", "id"),
-                     on="id", how="left")
-            .select(F.col("vi").alias("id"), "deg")
-            .withColumn("rank", F.lit(1.0 / n))
-            .withColumn("old", F.lit(None).cast("double"))
-            .repartition(vector_partitions(n, graph.spark)))
-    else:
-        # (src, dst) hash-partitioned by DST and persisted (NOT
-        # checkpointed): keeping the repartition visible to Catalyst
-        # means every round's groupBy(dst) aggregation reuses the
-        # cached partitioning — the per-round O(|E|) message shuffle
-        # disappears entirely (HashAggregate directly on the cached
-        # partitions, no Exchange). A checkpoint would hide the
-        # partitioning (LogicalRDD reports unknown) and re-shuffle
-        # every round. `balanced` also evens out the raw file splits
-        # (one fat fact-table partition next to tiny dims) once, for
-        # all rounds. The out-degree rides the RANK VECTOR (O(|V|))
-        # instead of widening the edge cache — one aggregation over
-        # the cached table at setup, zero extra E-scans.
-        e = balanced(e0, "dst").persist()
-        deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        # (id, deg, rank): the out-degree is a rider column on the
-        # rank vector, carried through every checkpoint — the
-        # per-round message join needs only ONE broadcast
-        # (vector ⊗ edges), and the division rank/deg is unchanged
-        # bit-for-bit. `old` (the convergence path's rider, see
-        # below) starts undefined: no previous round exists.
-        ranks = checkpointed(
-            graph.vertices.select("id")
-            .join(deg.withColumnRenamed("src", "id"), on="id", how="left")
-            .withColumn("rank", F.lit(1.0 / n))
-            .withColumn("old", F.lit(None).cast("double"))
-            .repartition(vector_partitions(n, graph.spark)))
+    # The encoded (src, dst) table is hash-partitioned by DST and
+    # persisted, NOT checkpointed: the repartition stays visible to
+    # Catalyst, so every round's groupBy(dst) reuses the cached
+    # partitioning with no per-round O(|E|) shuffle (a checkpoint's
+    # LogicalRDD reports unknown partitioning). `balanced` also evens
+    # out the raw file splits once, for all rounds. The out-degree is
+    # counted over the same encoded table — an edge to a non-vertex
+    # neither sends a message nor counts in its source's degree — and
+    # rides the RANK VECTOR, so the per-round message join needs only
+    # ONE broadcast (vector ⊗ edges). `old` (the convergence rider,
+    # see below) starts undefined: no previous round exists.
+    e = balanced(encode_edges(graph, e0, bcast), "dst").persist()
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    ranks = checkpointed(
+        idx.select(F.col("vi").alias("id"))
+        .join(deg.withColumnRenamed("src", "id"), on="id", how="left")
+        .withColumn("rank", F.lit(1.0 / n))
+        .withColumn("old", F.lit(None).cast("double"))
+        .repartition(vector_partitions(n, graph.spark)))
     rounds = fixed_rounds if fixed_rounds is not None else max_times
     # one JOB per round: the rank vector is LAZY-checkpointed and the
     # mass/convergence agg below (a full-vector scan) is the action
@@ -199,113 +205,62 @@ def page_rank(graph: PropertyGraph, alpha: float = 0.15,
                        .select(F.col("dst").alias("id"),
                                (F.col("rank") / F.col("deg")).alias("msg")))
             incoming = contrib.groupBy("id").agg(F.sum("msg").alias("inc"))
-            if fixed_rounds is None:
-                # Round-t action = ONE flat aggregation collecting the
-                # mass total AND the PREVIOUS round's L1 delta
-                # (optimization r11; r10 verdict item 3). The old shape
-                # computed the delta in the same round it belonged to,
-                # which needs comp = (1-total)/n and therefore a
-                # broadcast scalar subquery over `new` — one extra
-                # sequential broadcast-build job per round. Instead the
-                # vector carries BOTH folded predecessors as riders
-                # (r1 = rank''_{t-1}, r2 = rank''_{t-2}, already
-                # comp-folded), so changed_{t-1} = Σ|r1 - r2| needs no
-                # scalar subquery and rides the total's aggregation.
-                # The check thus lags one round: on convergence at
-                # round t-1 the loop has speculatively computed round
-                # t's messages (one O(|E|) job, only on early exit) and
-                # RETURNS the round-(t-1) vector — the identical
-                # expression the eager check returned, bit for bit.
-                # Jobs per round: 4 -> 3 (measured: 91 -> ~65 per
-                # 20-round b6_dist run).
-                vec = ranks.select("id", "deg",
-                                   F.col("rank").alias("r1"),
-                                   F.col("old").alias("r2"))
-                if bcast:
-                    # assembly as a RIGHT join from `incoming` to the
-                    # vector: no broadcast-build sub-job per round
-                    # (jobs/20-round run: 71 -> 51 measured).
-                    # CORRECTION (r11 session 2): the F.broadcast(vec)
-                    # hint does NOT apply here — build-right on a
-                    # right outer join is unsupported and Catalyst
-                    # plans a SortMergeJoin over the two ≤|V|-row
-                    # sides. Measured against the supported
-                    # alternative (vec ⟕ broadcast(incoming), one
-                    # extra build job/round): equal within noise on
-                    # the int tier (0.375 vs 0.400 s best per round at
-                    # sf0.1), so the fewer-jobs shape stays.
-                    # Convergence path only: the assembly's
-                    # partitioning changes the float-sum order of
-                    # total/changed by ~1 ULP, fine for the
-                    # count-shaped bench queries but not for the
-                    # hash-gated fixed-rounds path below, which keeps
-                    # the vector-streamed shape.
-                    new = (incoming.join(F.broadcast(vec), on="id",
-                                         how="right")
-                           .select("id", "deg", "r1", "r2",
-                                   (F.lit(alpha / n) + F.lit(1.0 - alpha)
-                                    * F.coalesce(F.col("inc"), F.lit(0.0)))
-                                   .alias("rank")))
-                else:
-                    new = (vec.join(incoming, on="id", how="left")
-                           .select("id", "deg", "r1", "r2",
-                                   (F.lit(alpha / n) + F.lit(1.0 - alpha)
-                                    * F.coalesce(F.col("inc"), F.lit(0.0)))
-                                   .alias("rank")))
-                new = checkpointed(new, eager=False)
-                row = (new.agg(
-                    F.sum("rank").alias("total"),
-                    F.sum(F.abs(F.col("r1") - F.col("r2")))
-                    .alias("changed")).collect()[0])
-                total, changed = row["total"], row["changed"]
-                if changed is not None and changed < precision:
-                    # converged at round t-1: `ranks` (built from
-                    # prev's checkpoint) IS the result; drop the
-                    # speculative round's blocks
-                    release_ckpt(new)
-                    break
-                # comp in Python doubles == the JVM's (1-total)/n
-                # (same IEEE-754 ops); the fold rank+comp is the same
-                # expression the eager check used
-                comp = (1.0 - total) / n
-                ranks = new.select(
-                    "id", "deg",
-                    (F.col("rank") + F.lit(comp)).alias("rank"),
-                    F.col("r1").alias("old"))
-                # round t is materialized — round t-1's checkpoint
-                # blocks are dead; free them now instead of waiting
-                # for JVM GC to notice (keeps 20-round loops flat and
-                # leaves no residue for the next query)
-                release_ckpt(prev)
-                prev = new
-            else:
-                new = (ranks.select("id", "deg")
-                       .join(_r(incoming), on="id", how="left")
-                       .select("id", "deg",
-                               (F.lit(alpha / n) + F.lit(1.0 - alpha)
-                                * F.coalesce(F.col("inc"), F.lit(0.0)))
-                               .alias("rank")))
-                new = checkpointed(new, eager=False)
-                total = new.agg(F.sum("rank")).collect()[0][0]
-                comp = (1.0 - total) / n
-                ranks = new.select(
-                    "id", "deg", (F.col("rank") + F.lit(comp)).alias("rank"))
-                release_ckpt(prev)
-                prev = new
+            # Round-t action = ONE flat aggregation collecting the
+            # mass total AND the previous round's L1 delta: the vector
+            # carries both comp-folded predecessors as riders
+            # (r1 = rank''_{t-1}, r2 = rank''_{t-2}), so
+            # changed_{t-1} = Σ|r1 - r2| needs no scalar subquery
+            # (jobs per 20-round b6_dist run: 91 -> ~65). The check
+            # lags one round: on convergence at t-1 the loop returns
+            # the round-(t-1) vector and drops round t's speculative
+            # messages. fixed_rounds runs the same rounds and never
+            # stops early.
+            vec = ranks.select("id", "deg", F.col("rank").alias("r1"),
+                               F.col("old").alias("r2"))
+            # assembly as a RIGHT join from `incoming` to the vector
+            # (a SortMergeJoin of two ≤|V|-row sides): no
+            # broadcast-build sub-job per round (jobs/20-round run:
+            # 71 -> 51), and per round equal within noise to the
+            # supported vec ⟕ broadcast(incoming) (0.375 vs 0.400 s
+            # best at sf0.1).
+            new = (incoming.join(vec, on="id", how="right")
+                   .select("id", "deg", "r1", "r2",
+                           (F.lit(alpha / n) + F.lit(1.0 - alpha)
+                            * F.coalesce(F.col("inc"), F.lit(0.0)))
+                           .alias("rank")))
+            new = checkpointed(new, eager=False)
+            row = (new.agg(
+                F.sum("rank").alias("total"),
+                F.sum(F.abs(F.col("r1") - F.col("r2")))
+                .alias("changed")).collect()[0])
+            total, changed = row["total"], row["changed"]
+            if (fixed_rounds is None and changed is not None
+                    and changed < precision):
+                # converged at round t-1: `ranks` (built from prev's
+                # checkpoint) IS the result; drop the speculative
+                # round's blocks
+                release_ckpt(new)
+                break
+            # comp in Python doubles == the JVM's (1-total)/n (same
+            # IEEE-754 ops); the fold rank+comp is the same expression
+            # the eager check used
+            comp = (1.0 - total) / n
+            ranks = new.select(
+                "id", "deg",
+                (F.col("rank") + F.lit(comp)).alias("rank"),
+                F.col("r1").alias("old"))
+            # round t is materialized — round t-1's checkpoint blocks
+            # are dead; free them now instead of waiting for JVM GC to
+            # notice (keeps 20-round loops flat and leaves no residue
+            # for the next query)
+            release_ckpt(prev)
+            prev = new
     # the returned vector derives from the last round's checkpoint,
     # not from e — safe to release the cached edge table and the last
-    # round's (now re-materialized) vector
-    out = ranks.select("id", "rank")
-    if int_tier:
-        # decode the long keys back to vertex ids: one broadcast join
-        # against the checkpointed index (O(|V|), same gate as the
-        # round broadcasts); ranks themselves are untouched doubles
-        dec = idx.select("vi", F.col("id").alias("__sid"))
-        out = (out.join(F.broadcast(dec), on=F.col("id") == F.col("vi"))
-               .select(F.col("__sid").alias("id"), "rank"))
-    out = checkpointed(out)
+    # round's (now re-materialized) vector. The decode is one join
+    # against the index; ranks themselves are untouched doubles.
+    out = checkpointed(decode_ids(graph, ranks.select("id", "rank"), bcast,
+                                  "id"))
     release_ckpt(prev)
-    if int_tier:
-        release_ckpt(idx)
     e.unpersist()
     return out

@@ -6,11 +6,13 @@ Min-id label propagation over the undirected adjacency:
     comp_{k+1}(v) = min(comp_k(v), min_{u ~ v} comp_k(u))
 
 until fixpoint (delta count == 0) or ``fixed_rounds``. Each round is
-one join + one groupBy-min; labels are strings so min = lexicographic
-min (deterministic), and the round count is bounded by graph diameter
-(small for this schema). `wcc_star` is the diameter-independent
-large-star/small-star variant for 100 TB graphs — identical result,
-O(log²) rounds.
+one join + one groupBy-min over the graph's order-preserving vertex
+index (longs, see algorithms.pagerank.indexed): min over the encoding
+is the lexicographic min over the vertex ids, so the decoded component
+is the smallest reachable id (deterministic), and the round count is
+bounded by graph diameter (small for this schema). `wcc_star` is the
+diameter-independent large-star/small-star variant for 100 TB graphs —
+identical result, O(log²) rounds.
 """
 
 from __future__ import annotations
@@ -23,7 +25,8 @@ from contextlib import nullcontext
 from incubator_hugegraph_spark.graph import (
     BOTH, PropertyGraph, balanced, checkpointed, iterate_hygiene, no_aqe,
     release_ckpt)
-from incubator_hugegraph_spark.algorithms.pagerank import BROADCAST_VERTEX_LIMIT
+from incubator_hugegraph_spark.algorithms.pagerank import (
+    BROADCAST_VERTEX_LIMIT, decode_ids, encode_edges, indexed)
 
 
 def wcc(graph: PropertyGraph, labels: list[str] | None = None,
@@ -39,61 +42,32 @@ def wcc(graph: PropertyGraph, labels: list[str] | None = None,
         from incubator_hugegraph_spark.ram import ram_fits, ram_wcc
         if engine == "ram" or ram_fits(graph):
             return ram_wcc(graph, labels)
+    idx, n = indexed(graph)
     # component vector is O(|V|): broadcast it while it fits (same
     # adaptive rule as page_rank — see BROADCAST_VERTEX_LIMIT there
     # for the driver-heap sizing rationale) so each round's
     # propagation is a map-side join; shuffle joins past the limit
-    bcast = graph.vertices.count() <= BROADCAST_VERTEX_LIMIT
+    bcast = n <= BROADCAST_VERTEX_LIMIT
 
     def _b(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if bcast else df
 
-    # §2.3 narrower types (optimization r11, finding #9 — shared with
-    # page_rank): on the broadcast fixpoint tier, encode vertex ids to
-    # longs once through the ORDER-PRESERVING vertex_index and run
-    # every round's join/min/least on longs. Unlike page_rank there is
-    # no float anywhere — min over the order-preserving encoding IS
-    # the lexicographic min, so the decoded components are bit-
-    # identical strings. The hash-gated fixed-rounds path keeps the
-    # string-keyed plan byte-identical anyway (same discipline as
-    # page_rank). The encode also fuses dedup into the cache build:
+    # The adjacency is reused every round: encode it to longs once,
+    # hash-partition by SRC and persist with the repartition visible
+    # to Catalyst so each round's groupBy(src) min-aggregation runs
+    # directly on the cached partitions — no per-round O(|E|) shuffle
+    # (same pattern as page_rank's dst-partitioned edge cache).
     # repartition(src) BEFORE dropDuplicates lets the dedup aggregate
-    # run on the already-src-clustered partitions (hashpartitioning
-    # on a subset of the grouping keys satisfies the aggregate's
+    # run on the already-src-clustered partitions (hashpartitioning on
+    # a subset of the grouping keys satisfies the aggregate's
     # distribution) — one O(|E|) exchange where distinct().
     # repartition(src) paid two.
-    int_tier = bcast and fixed_rounds is None
-    if int_tier:
-        from incubator_hugegraph_spark.algorithms.pagerank import (
-            vertex_index)
-        idx = vertex_index(graph)
-        adj = (balanced(
-            graph.adj(BOTH, labels).select("src", "dst")
-            .join(F.broadcast(idx.withColumnRenamed("id", "src")),
-                  on="src")
-            .select(F.col("vi").alias("src"), "dst")
-            .join(F.broadcast(idx.withColumnRenamed("id", "dst")),
-                  on="dst")
-            .select("src", F.col("vi").alias("dst")),
-            "src")
-            .dropDuplicates(["src", "dst"]).persist())
-        adj.count()
-        comp = checkpointed(
-            idx.select(F.col("vi").alias("id"),
-                       F.col("vi").alias("component")))
-    else:
-        # the adjacency is reused every round: dedup once,
-        # hash-partition by SRC and persist with the repartition
-        # visible to Catalyst so each round's groupBy(src)
-        # min-aggregation runs directly on the cached partitions — no
-        # per-round O(|E|) shuffle (same pattern as page_rank's
-        # dst-partitioned edge cache)
-        adj = balanced(
-            graph.adj(BOTH, labels).select("src", "dst").distinct(),
-            "src").persist()
-        adj.count()
-        comp = checkpointed(
-            graph.vertices.select("id", F.col("id").alias("component")))
+    adj = (balanced(encode_edges(
+        graph, graph.adj(BOTH, labels).select("src", "dst"), bcast), "src")
+        .dropDuplicates(["src", "dst"]).persist())
+    adj.count()
+    comp = checkpointed(
+        idx.select(F.col("vi").alias("id"), F.col("vi").alias("component")))
     rounds = fixed_rounds if fixed_rounds is not None else max_rounds
     # one JOB per round (broadcast path): lazy checkpoint + the
     # full-vector fixpoint agg as the materializing action, AQE
@@ -114,31 +88,18 @@ def wcc(graph: PropertyGraph, labels: list[str] | None = None,
             # over the checkpointed vector, not another join. On the
             # broadcast tier the AGGREGATED nbr_min (≤|V| rows) is the
             # broadcast build side of a LEFT join from the vector
-            # (re-measured r11 session 2: the r10/r11 right-join-with-
-            # broadcast-vector shape never actually broadcast — a
-            # build-RIGHT hint on a RIGHT outer join is unsupported
-            # ("HintErrorLogger: not supported ... build right for
-            # right outer join") and Catalyst fell back to a
+            # (re-measured r11 session 2: a build-RIGHT hint on a RIGHT
+            # outer join is unsupported and Catalyst fell back to a
             # SortMergeJoin with two per-round exchanges + sorts; the
             # supported broadcast costs one nbr_min build sub-job per
-            # round and measured ~20% faster per round on the int
-            # tier: 0.417 vs 0.528 s best at sf0.1). Exact on every
-            # path — components and the delta are min/least/count,
-            # no floats.
-            vec = comp.withColumnRenamed("component", "old")
-            if bcast:
-                new = (vec.join(F.broadcast(nbr_min), on="id",
-                                how="left")
-                       .select("id", F.col("old"),
-                               F.least("old",
-                                       F.coalesce("nbr_comp", "old"))
-                               .alias("component")))
-            else:
-                new = (vec.join(nbr_min, on="id", how="left")
-                       .select("id", F.col("old"),
-                               F.least("old",
-                                       F.coalesce("nbr_comp", "old"))
-                               .alias("component")))
+            # round and measured ~20% faster per round: 0.417 vs
+            # 0.528 s best at sf0.1). Exact — components and the delta
+            # are min/least/count, no floats.
+            new = (comp.withColumnRenamed("component", "old")
+                   .join(_b(nbr_min), on="id", how="left")
+                   .select("id", "old",
+                           F.least("old", F.coalesce("nbr_comp", "old"))
+                           .alias("component")))
             if fixed_rounds is None:
                 # lazy checkpoint: the delta agg scans EVERY partition
                 # (a limit-probe would materialize only some), so the
@@ -164,21 +125,8 @@ def wcc(graph: PropertyGraph, labels: list[str] | None = None,
                 if getattr(comp, "_ckpt_jrdd", None) is not None:
                     release_ckpt(prev)
                     prev = comp
-    if int_tier:
-        # decode both long columns back to vertex ids (two broadcast
-        # joins against the checkpointed index; exact — see above)
-        d1 = idx.select(F.col("vi").alias("id"),
-                        F.col("id").alias("__sid"))
-        d2 = idx.select(F.col("vi").alias("component"),
-                        F.col("id").alias("__scomp"))
-        comp = (comp.join(F.broadcast(d1), on="id")
-                .join(F.broadcast(d2), on="component")
-                .select(F.col("__sid").alias("id"),
-                        F.col("__scomp").alias("component")))
-    comp = checkpointed(comp)
+    comp = checkpointed(decode_ids(graph, comp, bcast, "id", "component"))
     release_ckpt(prev)
-    if int_tier:
-        release_ckpt(idx)
     adj.unpersist()
     if not converged:
         # SILENTLY returning a partial propagation splits one true

@@ -62,6 +62,35 @@ class PropertyGraph:
         self.vertices = _live(self.vertices)
         self.edges = _live(self.edges)
 
+    # -- state derived from the graph --------------------------------
+    def derived(self, key, build):
+        """``build()``'s value, memoized on the graph under ``key``.
+
+        One memo owns everything computed from the graph's tables (the
+        order-preserving vertex index, the RAM tier's adjacency
+        arrays and edge count). An entry holds the ``vertices`` and
+        ``edges`` objects it was built from and is valid only while
+        both attributes are still those same objects — every write
+        surface (REST, Gremlin, Cypher, mutate) rebinds them, so the
+        next read rebuilds. The check is identity against the held
+        references, never ``id()``: a freed DataFrame's id can be
+        reused by a later one. Checkpoints in a value are taken off
+        the session's scratch list, so ``free_scratch`` between
+        queries leaves graph-owned state intact; a replaced entry's
+        blocks are left to the JVM cleaner, since a lazy result of an
+        earlier call may still read them."""
+        memo = self.__dict__.setdefault("_derived", {})
+        hit = memo.get(key)
+        if hit and hit[0] is self.vertices and hit[1] is self.edges:
+            return hit[2]
+        value = build()
+        for part in value if isinstance(value, tuple) else (value,):
+            jrdd = getattr(part, "_ckpt_jrdd", None)
+            if jrdd is not None:
+                _SCRATCH[:] = [j for j in _SCRATCH if j is not jrdd]
+        memo[key] = (self.vertices, self.edges, value)
+        return value
+
     # -- adjacency ---------------------------------------------------
     def adj(self, direction: str = OUT,
             labels: list[str] | None = None) -> DataFrame:

@@ -101,44 +101,32 @@ def jaccard_top_batch(graph: PropertyGraph, sources: list[str], top: int,
         if engine == "ram" or ram_fits(graph):
             return ram_jaccard_top_batch(graph, sources, top, direction,
                                          labels)
-    spark = graph.spark
-    # §2.3 narrower types (r11 session 2): long-keyed neighbor table
-    # while |V| fits the broadcast gate — the intersection join on n
-    # and the (source, candidate) count aggregation run on longs;
-    # EXACT under the order-preserving encoding (jaccard is an
-    # integer-count ratio, ranks tie-break on the preserved id order).
-    # Decoded after the rank filters. Interleaved A/B at sf0.1
-    # (3 pairs, best-of-3): 9.94/5.98/4.96 -> 6.21/4.93/4.43 s.
-    # The same encode was MEASURED AND REJECTED for
-    # fusiform_similarity (+1.5-2 s, 3/3 pairs — its table is
-    # prefix-filtered small and alpha-pruned, so the index build +
-    # encode broadcasts outweigh the probe win) and triangle_count
-    # (+0.3-1 s, 3/3 quiet pairs — the oriented wedge semi-join is
-    # already cheap per row); those keep string keys.
+    # §2.3 narrower types (r11 session 2): the neighbor table is keyed
+    # by the graph's order-preserving vertex index, so the
+    # intersection join on n and the (source, candidate) count
+    # aggregation run on longs; EXACT (jaccard is an integer-count
+    # ratio, ranks tie-break on the preserved id order). Decoded after
+    # the rank filters. Interleaved A/B at sf0.1 (3 pairs, best-of-3):
+    # 9.94/5.98/4.96 -> 6.21/4.93/4.43 s. The same encode was MEASURED
+    # AND REJECTED for fusiform_similarity (+1.5-2 s, 3/3 pairs — its
+    # table is prefix-filtered small and alpha-pruned, so the index
+    # build + encode broadcasts outweigh the probe win) and
+    # triangle_count (+0.3-1 s, 3/3 quiet pairs — the oriented wedge
+    # semi-join is already cheap per row); those keep string keys.
     from incubator_hugegraph_spark.algorithms.pagerank import (
-        BROADCAST_VERTEX_LIMIT, vertex_index)
-    int_tier = graph.vertices.count() <= BROADCAST_VERTEX_LIMIT
-    sdf = spark.createDataFrame([(s,) for s in sources], "source string")
-    if int_tier:
-        idx = vertex_index(graph)
-        nbr = checkpointed(
-            prepared_adj(graph, direction, labels, max_degree)
-            .select("src", "dst")
-            .join(F.broadcast(idx.withColumnRenamed("id", "src")),
-                  on="src")
-            .select(F.col("vi").alias("src"), "dst")
-            .join(F.broadcast(idx.withColumnRenamed("id", "dst")),
-                  on="dst")
-            .select("src", F.col("vi").alias("dst"))
-            .distinct())
-        # sources joined to their encoded ids on the broadcast side;
-        # svi rides src_n so the candidate != source filter compares
-        # the encoded ids (src is a long now)
-        sdf = (sdf.join(F.broadcast(idx), on=sdf.source == idx.id)
-               .select("source", F.col("vi").alias("svi")))
-    else:
-        nbr = _nbrs(graph, direction, labels, max_degree)
-        sdf = sdf.withColumn("svi", F.col("source"))
+        BROADCAST_VERTEX_LIMIT, decode_ids, encode_edges, indexed)
+    idx, n = indexed(graph)
+    bcast = n <= BROADCAST_VERTEX_LIMIT
+    nbr = checkpointed(encode_edges(
+        graph, prepared_adj(graph, direction, labels, max_degree)
+        .select("src", "dst"), bcast).distinct())
+    # sources joined to their encoded ids (the tiny source list is the
+    # broadcast side); svi rides src_n so the candidate != source
+    # filter compares the encoded ids
+    sdf = graph.spark.createDataFrame([(s,) for s in sources],
+                                      "source string")
+    sdf = (idx.join(F.broadcast(sdf), on=idx.id == sdf.source)
+           .select("source", F.col("vi").alias("svi")))
     sizes = nbr.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     src_n = (nbr.join(F.broadcast(sdf), on=nbr.src == sdf.svi)
              .select("source", "svi", F.col("dst").alias("n")))
@@ -169,8 +157,8 @@ def jaccard_top_batch(graph: PropertyGraph, sources: list[str], top: int,
     # degree table down to the source list BEFORE broadcasting it
     # (round-2 verdict: broadcasting all of `sizes` ships every vertex's
     # degree to every executor). The filter is keyed on svi, the encoded
-    # source id on the int tier (the source string on the string tier),
-    # so s_deg keeps one row per source and needs no source column.
+    # source id, so s_deg keeps one row per source and needs no source
+    # column.
     s_deg = (sizes.join(F.broadcast(sdf), on=sizes.src == sdf.svi,
                         how="left_semi")
              .select(F.col("src").alias("svi"), F.col("deg").alias("s_deg")))
@@ -193,30 +181,22 @@ def jaccard_top_batch(graph: PropertyGraph, sources: list[str], top: int,
     # candidate sets are nowhere near a task's capacity.
     w2 = Window.partitionBy("source").orderBy(F.desc("jaccard"),
                                               F.asc("id"))
-    def _decode(df: DataFrame) -> DataFrame:
-        # int tier only: map the ranked candidates' encoded ids back
-        # to vertex-id strings (one broadcast join over ≤ sources·top
-        # rows; ranks were computed on the preserved order, so the
-        # result is row-identical to the string path's)
-        if not int_tier:
-            return df
-        dec = idx.select("vi", F.col("id").alias("__sid"))
-        return (df.join(F.broadcast(dec), on=F.col("id") == F.col("vi"))
-                .select("source", F.col("__sid").alias("id"), "jaccard"))
-
     if src_n_rows <= _bfs.BROADCAST_FRONTIER_LIMIT:
-        return _decode(scored.withColumn("__rn", F.row_number().over(w2))
-                       .filter(F.col("__rn") <= top).drop("__rn"))
-    w1 = Window.partitionBy("source", "__salt").orderBy(
-        F.desc("jaccard"), F.asc("id"))
-    return _decode(
-        scored
-        .withColumn("__salt", F.pmod(F.hash("id"), F.lit(32)))
-        .withColumn("__r1", F.row_number().over(w1))
-        .filter(F.col("__r1") <= top)
-        .withColumn("__rn", F.row_number().over(w2))
-        .filter(F.col("__rn") <= top)
-        .drop("__r1", "__rn", "__salt"))
+        ranked = (scored.withColumn("__rn", F.row_number().over(w2))
+                  .filter(F.col("__rn") <= top).drop("__rn"))
+    else:
+        w1 = Window.partitionBy("source", "__salt").orderBy(
+            F.desc("jaccard"), F.asc("id"))
+        ranked = (scored
+                  .withColumn("__salt", F.pmod(F.hash("id"), F.lit(32)))
+                  .withColumn("__r1", F.row_number().over(w1))
+                  .filter(F.col("__r1") <= top)
+                  .withColumn("__rn", F.row_number().over(w2))
+                  .filter(F.col("__rn") <= top)
+                  .drop("__r1", "__rn", "__salt"))
+    # the ranked candidates' encoded ids back to vertex ids: one join
+    # over ≤ sources·top rows
+    return decode_ids(graph, ranked, bcast, "id")
 
 
 def fusiform_similarity(graph: PropertyGraph,

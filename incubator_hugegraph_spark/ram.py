@@ -21,8 +21,9 @@ harness (`page_rank_ram`, `wcc_ram`).
 
 Determinism notes:
 - vertex indices are assigned in LEXICOGRAPHIC id order, so numeric
-  ``min`` over indices == the distributed string ``min`` (ids are
-  ASCII; numpy '<U' and Spark UTF8 binary comparison agree).
+  ``min`` over indices == the distributed loops' ``min`` over their
+  order-preserving index (ids are ASCII; numpy '<U' and Spark UTF8
+  binary comparison agree).
 - float64 summation order differs from Spark's partial aggregation,
   which itself differs run-to-run; all consumers round (the oracles
   at 6-9 decimals) far above the ~1e-15 reordering noise.
@@ -55,13 +56,20 @@ RAM_EDGE_LIMIT = 50_000_000
 def ram_fits(graph: PropertyGraph) -> bool:
     # memoized like the index arrays (review r06: every auto-gated
     # call paid a full O(|E|) count job before the kernel started);
-    # same staleness assumption as _ram_cache — the cache lives on
-    # the graph object, and writes rebind graph.edges to a new object
-    cache = graph.__dict__.setdefault("_ram_cache", {})
-    key = ("_edge_count", id(graph.edges))
-    if key not in cache:
-        cache[key] = graph.edges.count()
-    return cache[key] <= RAM_EDGE_LIMIT
+    # recounted once a write rebinds graph.edges (PropertyGraph.derived)
+    return graph.derived(("ram", "edge_count"),
+                         graph.edges.count) <= RAM_EDGE_LIMIT
+
+
+def _vindex(graph: PropertyGraph):
+    """(ids, id→position index): vertex ids sorted lexicographically,
+    collected once per graph."""
+    def build():
+        import pandas as pd
+        vid = graph.vertices.select("id").toPandas()["id"]
+        ids = np.sort(vid.to_numpy(dtype="U"))
+        return ids, pd.Index(ids)
+    return graph.derived(("ram", "vindex"), build)
 
 
 def _index_edges(graph: PropertyGraph, direction: str,
@@ -70,26 +78,25 @@ def _index_edges(graph: PropertyGraph, direction: str,
     numeric min over indices == string min over ids); index arrays
     carry one entry PER EDGE (multi-edges keep multiplicity,
     PageRankAlgorithm counts parallel edges separately). Memoized on
-    the graph object — one Arrow collect serves every kernel of a
-    query (the RamTable is loaded once per hot graph too)."""
-    import pandas as pd
+    the graph (PropertyGraph.derived) — one Arrow collect serves
+    every kernel of a query (the RamTable is loaded once per hot
+    graph too), and a write that rebinds the graph's tables reloads
+    it."""
+    return graph.derived(
+        ("ram", direction, tuple(labels) if labels else None),
+        lambda: _load_edges(graph, direction, labels))
 
-    cache = graph.__dict__.setdefault("_ram_cache", {})
-    key = (direction, tuple(labels) if labels else None)
-    if key in cache:
-        return cache[key]
-    if "_vindex" not in cache:
-        vid = graph.vertices.select("id").toPandas()["id"]
-        ids = np.sort(vid.to_numpy(dtype="U"))
-        cache["_vindex"] = (ids, pd.Index(ids))
-    ids, vindex = cache["_vindex"]
+
+def _load_edges(graph: PropertyGraph, direction: str,
+                labels: list[str] | None):
+    ids, vindex = _vindex(graph)
     e = graph.edges.select("src", "dst", "label")
     if labels:
         e = e.filter(e.label.isin(labels))
     pdf = e.select("src", "dst").toPandas()
     # hash-based id→index (C-speed); -1 marks dangling endpoints,
-    # dropped below — mirrors the distributed loops, where the vector
-    # join filters them out
+    # dropped below — the distributed loops' id encode
+    # (algorithms.pagerank.encode_edges) drops them the same way
     ps = vindex.get_indexer(pdf["src"])
     pd_ = vindex.get_indexer(pdf["dst"])
     ok = (ps >= 0) & (pd_ >= 0)
@@ -103,8 +110,7 @@ def _index_edges(graph: PropertyGraph, direction: str,
         dst = np.concatenate([pd_, ps])
     else:
         src, dst = pd_, ps
-    cache[key] = (ids, src, dst)
-    return cache[key]
+    return ids, src, dst
 
 
 def ram_page_rank(graph: PropertyGraph, alpha: float = 0.15,
@@ -173,21 +179,18 @@ def _und_indexed(graph: PropertyGraph, labels: list[str] | None):
     strings and, equivalently, as lex-ordered indices). Memoized with
     the other RamTable structures — the O(E log E) unique is paid
     once per hot graph, not per triangle/coefficient call."""
-    cache = graph.__dict__.setdefault("_ram_cache", {})
-    ckey = ("und", tuple(labels) if labels else None)
-    if ckey in cache:
-        return cache[ckey]
-    ids, src, dst = _index_edges(graph, OUT, labels)
-    a = np.minimum(src, dst)
-    b = np.maximum(src, dst)
-    keep = a != b
-    a, b = a[keep], b[keep]
-    n = len(ids)
-    key = a.astype(np.int64) * n + b
-    key = np.unique(key)
-    cache[ckey] = (ids, (key // n).astype(np.int64),
-                   (key % n).astype(np.int64), key)
-    return cache[ckey]
+    def build():
+        ids, src, dst = _index_edges(graph, OUT, labels)
+        a = np.minimum(src, dst)
+        b = np.maximum(src, dst)
+        keep = a != b
+        a, b = a[keep], b[keep]
+        n = len(ids)
+        key = np.unique(a.astype(np.int64) * n + b)
+        return (ids, (key // n).astype(np.int64),
+                (key % n).astype(np.int64), key)
+    return graph.derived(("ram", "und", tuple(labels) if labels else None),
+                         build)
 
 
 def _segmented_arange(lengths: np.ndarray) -> np.ndarray:
@@ -276,18 +279,14 @@ def _csr(graph: PropertyGraph, direction: str, labels: list[str] | None):
     """Memoized CSR adjacency (ids, indptr, nbrs) — the literal
     RamTable shape (RamTable.java keeps vertex→edge offsets + a flat
     neighbor array)."""
-    cache = graph.__dict__.setdefault("_ram_cache", {})
-    key = ("csr", direction, tuple(labels) if labels else None)
-    if key in cache:
-        return cache[key]
-    ids, src, dst = _index_edges(graph, direction, labels)
-    n = len(ids)
-    order = np.argsort(src, kind="stable")
-    nbrs = dst[order]
-    counts = np.bincount(src, minlength=n)
-    indptr = np.concatenate([[0], np.cumsum(counts)]).astype(np.int64)
-    cache[key] = (ids, indptr, nbrs)
-    return cache[key]
+    def build():
+        ids, src, dst = _index_edges(graph, direction, labels)
+        order = np.argsort(src, kind="stable")
+        counts = np.bincount(src, minlength=len(ids))
+        indptr = np.concatenate([[0], np.cumsum(counts)]).astype(np.int64)
+        return ids, indptr, dst[order]
+    return graph.derived(
+        ("ram", "csr", direction, tuple(labels) if labels else None), build)
 
 
 def ram_bfs(graph: PropertyGraph, source_ids: list[str], depth: int,
@@ -457,20 +456,19 @@ def _csr_dedup(graph: PropertyGraph, direction: str,
                labels: list[str] | None):
     """CSR over DISTINCT neighbor pairs (set semantics — what the
     similarity operators consume)."""
-    cache = graph.__dict__.setdefault("_ram_cache", {})
-    key = ("csr-dedup", direction, tuple(labels) if labels else None)
-    if key in cache:
-        return cache[key]
-    ids, src, dst = _index_edges(graph, direction, labels)
-    n = len(ids)
-    ek = np.unique(src.astype(np.int64) * n + dst)
-    s = (ek // n).astype(np.int64)
-    d = (ek % n).astype(np.int64)
-    nbrs = d  # already grouped by s ascending, d ascending within s
-    counts = np.bincount(s, minlength=n)
-    indptr = np.concatenate([[0], np.cumsum(counts)]).astype(np.int64)
-    cache[key] = (ids, indptr, nbrs)
-    return cache[key]
+    def build():
+        ids, src, dst = _index_edges(graph, direction, labels)
+        n = len(ids)
+        ek = np.unique(src.astype(np.int64) * n + dst)
+        s = (ek // n).astype(np.int64)
+        d = (ek % n).astype(np.int64)
+        counts = np.bincount(s, minlength=n)
+        indptr = np.concatenate([[0], np.cumsum(counts)]).astype(np.int64)
+        # d is already grouped by s ascending, ascending within s
+        return ids, indptr, d
+    return graph.derived(
+        ("ram", "csr-dedup", direction, tuple(labels) if labels else None),
+        build)
 
 
 def _round_half_up(x: np.ndarray, digits: int) -> np.ndarray:
@@ -1268,10 +1266,7 @@ def _step_indexed(graph: PropertyGraph, st: dict):
 
     from incubator_hugegraph_spark.operators.bfs import _step_adj
 
-    cache = graph.__dict__.setdefault("_ram_cache", {})
-    if "_vindex" not in cache:
-        _index_edges(graph, OUT, None)  # builds the id index
-    ids, vindex = cache["_vindex"]
+    ids, vindex = _vindex(graph)
     pdf = _step_adj(graph, st).select("src", "dst").toPandas()
     ps = vindex.get_indexer(pdf["src"])
     pd_ = vindex.get_indexer(pdf["dst"])
@@ -1728,10 +1723,7 @@ def ram_customized_paths(graph: PropertyGraph, sources: list[str],
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    cache = graph.__dict__.setdefault("_ram_cache", {})
-    if "_vindex" not in cache:
-        _index_edges(graph, OUT, None)
-    ids, vindex = cache["_vindex"]
+    ids, vindex = _vindex(graph)
     frontier: list[tuple[tuple[int, ...], float]] = []
     for srcv in sources:
         p = _vpos(ids, srcv)

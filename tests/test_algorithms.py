@@ -50,8 +50,8 @@ def test_wcc_int_tier_exact_across_tiers(graph, monkeypatch):
     tier encodes vertex ids to longs through the ORDER-PRESERVING
     vertex_index, so min/least over the encoding IS the lexicographic
     min — components must decode bit-identical to (a) the RamTable
-    kernel, (b) the string-keyed fixed-rounds path, and (c) the
-    string-keyed shuffle fixpoint tier (broadcast gate forced off)."""
+    kernel, (b) the fixed-rounds loop, and (c) the shuffle fixpoint
+    tier (broadcast gate forced off)."""
     import sys
     wccmod = sys.modules["incubator_hugegraph_spark.algorithms.wcc"]
 
@@ -61,15 +61,15 @@ def test_wcc_int_tier_exact_across_tiers(graph, monkeypatch):
         assert j.filter(F.col("ca").isNull() | F.col("component").isNull()
                         | (F.col("ca") != F.col("component"))).count() == 0
 
-    wd = wcc(graph, engine="dist")          # int tier (bcast fixpoint)
+    wd = wcc(graph, engine="dist")          # broadcast tier, fixpoint
     exact(wd, wcc(graph, engine="ram"))
-    exact(wd, wcc(graph, fixed_rounds=8))   # string tier, bcast loop
+    exact(wd, wcc(graph, fixed_rounds=8))   # broadcast tier, 8 rounds
     monkeypatch.setattr(wccmod, "BROADCAST_VERTEX_LIMIT", 0)
-    exact(wd, wcc(graph, engine="dist"))    # string tier, shuffle loop
+    exact(wd, wcc(graph, engine="dist"))    # shuffle tier, fixpoint
 
 
 def test_vertex_index_is_order_preserving(graph):
-    """The int tier's exactness argument rests on this property: the
+    """The encoded loops' exactness argument rests on this property: the
     encoded longs sort exactly like the vertex-id strings, uniquely."""
     from incubator_hugegraph_spark.algorithms.pagerank import vertex_index
     rows = vertex_index(graph).orderBy("id").collect()

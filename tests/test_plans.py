@@ -111,8 +111,8 @@ def test_jaccard_top_batch_filters_degree_before_broadcast(graph):
 
 def test_jaccard_top_batch_filters_degree_before_broadcast_string_tier(
         graph, monkeypatch):
-    """The same source-degree semi-filter on the string-keyed tier
-    (|V| past BROADCAST_VERTEX_LIMIT), where svi is the source string."""
+    """The same source-degree semi-filter on the shuffle tier
+    (|V| past BROADCAST_VERTEX_LIMIT)."""
     import incubator_hugegraph_spark.algorithms.pagerank as prmod
     from incubator_hugegraph_spark.operators.similarity import (
         jaccard_top_batch)

@@ -542,24 +542,24 @@ def test_ram_jaccard_matches_distributed(graph):
 
 
 def test_jaccard_int_tier_matches_string_tier(graph, monkeypatch):
-    """r11 session 2 (§2.3 narrower types): the broadcast-gated long-
-    keyed jaccard_top_batch must be ROW-IDENTICAL to the string-keyed
-    tier — jaccard is an integer-count ratio and the rank tie-breaks
-    run on the order-preserving encoding."""
+    """r11 session 2 (§2.3 narrower types): the broadcast tier of
+    jaccard_top_batch must be ROW-IDENTICAL to the shuffle tier —
+    jaccard is an integer-count ratio and the rank tie-breaks run on
+    the order-preserving encoding."""
     import incubator_hugegraph_spark.algorithms.pagerank as prmod
     from incubator_hugegraph_spark.operators.similarity import (
         jaccard_top_batch)
     srcs = [f"customer!{i}" for i in range(30)] + ["missing!7"]
-    a = jaccard_top_batch(graph, srcs, 10, engine="dist")   # int tier
+    a = jaccard_top_batch(graph, srcs, 10, engine="dist")   # broadcast
     monkeypatch.setattr(prmod, "BROADCAST_VERTEX_LIMIT", 0)
-    b = jaccard_top_batch(graph, srcs, 10, engine="dist")   # string tier
+    b = jaccard_top_batch(graph, srcs, 10, engine="dist")   # shuffle
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
 
 
 def test_jaccard_top_batch_duplicate_sources(graph, monkeypatch):
     """A repeated source answers once, as if listed once, on the RAM
-    tier, the int-keyed dist tier and the string-keyed dist tier: a
+    tier, the broadcast dist tier and the shuffle dist tier: a
     duplicate must neither repeat rows nor double the intersection
     counts (jaccard = |A∩B|/|A∪B| ≤ 1)."""
     import incubator_hugegraph_spark.algorithms.pagerank as prmod
@@ -570,8 +570,8 @@ def test_jaccard_top_batch_duplicate_sources(graph, monkeypatch):
         return sorted(map(tuple, jaccard_top_batch(
             graph, srcs, 5, engine=engine).collect()))
 
-    int_tier = prmod.BROADCAST_VERTEX_LIMIT
-    for engine, vertex_limit in [("ram", int_tier), ("dist", int_tier),
+    gate = prmod.BROADCAST_VERTEX_LIMIT
+    for engine, vertex_limit in [("ram", gate), ("dist", gate),
                                  ("dist", 0)]:
         monkeypatch.setattr(prmod, "BROADCAST_VERTEX_LIMIT", vertex_limit)
         once = rows(["customer!1"], engine)
