@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from incubator_hugegraph_spark import ram
 from incubator_hugegraph_spark.graph import (
     BOTH,
     NO_LIMIT,
@@ -28,12 +29,10 @@ def degree_centrality(graph: PropertyGraph, direction: str = BOTH,
                       engine: str = "auto") -> DataFrame:
     """(id, degree) with optional top-N (DegreeCentralityAlgorithm):
     one partial-aggregated groupBy; top-N ties broken by id.
-    Hot graphs serve from the RamTable bincount (engine='auto')."""
-    if engine != "dist":
-        from incubator_hugegraph_spark.ram import (ram_degree_centrality,
-                                                   ram_fits)
-        if engine == "ram" or ram_fits(graph):
-            return ram_degree_centrality(graph, direction, labels, top)
+    Hot graphs serve from the RamTable bincount (``engine``: see
+    ``ram.takes_ram``, as for every operator of this module)."""
+    if ram.takes_ram(graph, engine):
+        return ram.ram_degree_centrality(graph, direction, labels, top)
     deg = graph.degrees(direction, labels)
     if top != NO_LIMIT:
         deg = deg.orderBy(F.desc("degree"), F.asc("id")).limit(top)
@@ -49,10 +48,8 @@ def closeness_centrality(graph: PropertyGraph, sources: list[str],
     explicit source set; the reference samples). Multi-source BFS in
     one frontier keyed by (origin, vertex). Returns (id, closeness).
     Hot graphs run per-source CSR BFS (ram.ram_closeness)."""
-    if engine != "dist":
-        from incubator_hugegraph_spark.ram import ram_closeness, ram_fits
-        if engine == "ram" or ram_fits(graph):
-            return ram_closeness(graph, sources, max_depth, direction,
+    if ram.takes_ram(graph, engine):
+        return ram.ram_closeness(graph, sources, max_depth, direction,
                                  labels)
     spark = graph.spark
     adj = graph.adj(direction, labels).select("src", "dst").distinct()
@@ -89,11 +86,8 @@ def eigenvector_centrality(graph: PropertyGraph, rounds: int = 5,
     sampled gremlin walk visit counts; we use the standard
     deterministic power iteration, documented deviation). Returns
     (id, score)."""
-    if engine != "dist":
-        from incubator_hugegraph_spark.ram import (ram_eigenvector,
-                                                   ram_fits)
-        if engine == "ram" or ram_fits(graph):
-            return ram_eigenvector(graph, rounds, direction, labels, top)
+    if ram.takes_ram(graph, engine):
+        return ram.ram_eigenvector(graph, rounds, direction, labels, top)
     e = graph.adj(direction, labels).select("src", "dst")
     n = graph.vertices.count()
     x = graph.vertices.select("id").withColumn("score", F.lit(1.0 / n))
@@ -199,10 +193,8 @@ def betweenness_centrality(graph: PropertyGraph, sources: list[str],
     dependencies δ(v) = Σ_w σ(v)/σ(w)·(1+δ(w)). All joins, keyed by
     (origin, vertex). Returns (id, betweenness) over non-source
     vertices reached."""
-    if engine != "dist":
-        from incubator_hugegraph_spark.ram import ram_brandes, ram_fits
-        if engine == "ram" or ram_fits(graph):
-            return ram_brandes(graph, sources, max_depth, direction,
+    if ram.takes_ram(graph, engine):
+        return ram.ram_brandes(graph, sources, max_depth, direction,
                                labels, mode="betweenness")
     return _brandes_dist(graph, sources, max_depth, direction, labels,
                          "betweenness", "betweenness")
@@ -218,10 +210,8 @@ def stress_centrality(graph: PropertyGraph, sources: list[str],
     counts through v, not ratios. Backward recursion
     δ(v) = Σ_{w ∈ succ(v)} σ_sv · (1 + δ(w)/σ_sw); stress = Σ_s δ.
     Returns (id, stress) over non-source vertices reached."""
-    if engine != "dist":
-        from incubator_hugegraph_spark.ram import ram_brandes, ram_fits
-        if engine == "ram" or ram_fits(graph):
-            return ram_brandes(graph, sources, max_depth, direction,
+    if ram.takes_ram(graph, engine):
+        return ram.ram_brandes(graph, sources, max_depth, direction,
                                labels, mode="stress")
     return _brandes_dist(graph, sources, max_depth, direction, labels,
                          "stress", "stress")

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from incubator_hugegraph_spark import ram
 from incubator_hugegraph_spark.graph import (
     BOTH, PropertyGraph, checkpointed, iterate_hygiene)
 
@@ -72,27 +73,19 @@ def _triangles(und: DataFrame, degree_ordered: bool = False) -> DataFrame:
         on=["y", "z"], how="left_semi")
 
 
-def _ram_ok(graph: PropertyGraph, engine: str) -> bool:
-    """Take the RamTable-style wedge kernel (ram.py) when allowed and
-    the graph fits; MemoryError from the wedge-volume guard falls back
-    to the distributed plan at the call sites."""
-    if engine == "dist":
-        return False
-    from incubator_hugegraph_spark.ram import ram_fits
-    return engine == "ram" or ram_fits(graph)
-
-
 def triangle_count(graph: PropertyGraph,
                    labels: list[str] | None = None,
                    degree_ordered: bool = False,
                    engine: str = "auto") -> DataFrame:
     """Total triangle count (TriangleCountAlgorithm.java): oriented
     wedge join + closing-edge semi-join; in-memory wedge kernel on
-    hot graphs (engine='auto'/'ram'). Returns (triangles)."""
-    if _ram_ok(graph, engine):
-        from incubator_hugegraph_spark.ram import ram_triangle_count
+    hot graphs (``engine``: see ``ram.takes_ram``, as for every
+    operator of this module; the kernel's wedge-volume guard raises
+    MemoryError and hands over to the plan below). Returns
+    (triangles)."""
+    if ram.takes_ram(graph, engine):
         try:
-            return ram_triangle_count(graph, labels)
+            return ram.ram_triangle_count(graph, labels)
         except MemoryError:
             pass
     tri = _triangles(undirected_edges(graph, labels), degree_ordered)
@@ -104,10 +97,9 @@ def triangles_per_vertex(graph: PropertyGraph,
                          degree_ordered: bool = False,
                          engine: str = "auto") -> DataFrame:
     """(id, tri): triangles incident to each vertex."""
-    if _ram_ok(graph, engine):
-        from incubator_hugegraph_spark.ram import ram_triangles_per_vertex
+    if ram.takes_ram(graph, engine):
         try:
-            return ram_triangles_per_vertex(graph, labels)
+            return ram.ram_triangles_per_vertex(graph, labels)
         except MemoryError:
             pass
     tri = _triangles(undirected_edges(graph, labels), degree_ordered)
@@ -141,12 +133,10 @@ def k_core(graph: PropertyGraph, k: int,
     """k-core decomposition by iterative peeling
     (KCoreAlgorithm.java:45): drop vertices with degree < k over the
     surviving subgraph until fixpoint (or fixed_rounds). Returns (id).
-    Hot graphs peel in the RamTable kernel (engine='auto'/'ram',
-    ram.ram_k_core — identical per-round semantics incl.
-    fixed_rounds)."""
-    if _ram_ok(graph, engine):
-        from incubator_hugegraph_spark.ram import ram_k_core
-        return ram_k_core(graph, k, labels, fixed_rounds, max_rounds)
+    Hot graphs peel in the RamTable kernel (ram.ram_k_core —
+    identical per-round semantics incl. fixed_rounds)."""
+    if ram.takes_ram(graph, engine):
+        return ram.ram_k_core(graph, k, labels, fixed_rounds, max_rounds)
     und = checkpointed(undirected_edges(graph, labels))
     survivors = (und.select(F.col("a").alias("id"))
                  .union(und.select(F.col("b").alias("id")))
@@ -181,9 +171,8 @@ def lpa(graph: PropertyGraph, labels: list[str] | None = None,
     vertices keep their label. Returns (id, community). Hot graphs
     propagate in the RamTable kernel (ram.ram_lpa — identical
     per-round semantics)."""
-    if _ram_ok(graph, engine):
-        from incubator_hugegraph_spark.ram import ram_lpa
-        return ram_lpa(graph, labels, rounds, fixed_rounds)
+    if ram.takes_ram(graph, engine):
+        return ram.ram_lpa(graph, labels, rounds, fixed_rounds)
     und = undirected_edges(graph, labels)
     adj = checkpointed(
         und.select(F.col("a").alias("id"), F.col("b").alias("nbr"))

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from contextlib import nullcontext
 
+from incubator_hugegraph_spark import ram
 from incubator_hugegraph_spark.graph import (
     NO_LIMIT,
     OUT,
@@ -99,14 +100,21 @@ def indexed(graph: PropertyGraph) -> tuple[DataFrame, int]:
     return graph.derived("vertex_index", build)
 
 
-def encode_edges(graph: PropertyGraph, edges: DataFrame,
-                 bcast: bool) -> DataFrame:
+def vertex_broadcast(graph: PropertyGraph) -> bool:
+    """The vertex gate: True while |V| ≤ BROADCAST_VERTEX_LIMIT, read
+    at call time, so the O(|V|) index and state vectors ride broadcast
+    joins; past it every such join shuffles."""
+    return indexed(graph)[1] <= BROADCAST_VERTEX_LIMIT
+
+
+def encode_edges(graph: PropertyGraph, edges: DataFrame) -> DataFrame:
     """(src, dst) vertex ids → the index's longs. Inner joins: an edge
     with an endpoint that is not a vertex is dropped, as the RAM
     kernels drop it (ram._index_edges), so every tier sees the same
     edge set. The index is broadcast under the vertex gate and
     shuffle-joined past it."""
     idx, _ = indexed(graph)
+    bcast = vertex_broadcast(graph)
 
     def side(col: str) -> DataFrame:
         df = idx.withColumnRenamed("id", col)
@@ -117,12 +125,12 @@ def encode_edges(graph: PropertyGraph, edges: DataFrame,
             .select("src", F.col("vi").alias("dst")))
 
 
-def decode_ids(graph: PropertyGraph, df: DataFrame, bcast: bool,
-               *cols: str) -> DataFrame:
+def decode_ids(graph: PropertyGraph, df: DataFrame, *cols: str) -> DataFrame:
     """Map the encoded long columns ``cols`` of ``df`` back to vertex
-    ids (one join against the index per column; other columns and
-    the column order are kept)."""
+    ids (one join against the index per column, broadcast under the
+    vertex gate; other columns and the column order are kept)."""
     idx, _ = indexed(graph)
+    bcast = vertex_broadcast(graph)
     for c in cols:
         dec = idx.select(F.col("vi").alias(c), F.col("id").alias("__sid"))
         df = (df.join(F.broadcast(dec) if bcast else dec, on=c)
@@ -140,20 +148,11 @@ def page_rank(graph: PropertyGraph, alpha: float = 0.15,
     """Returns (id, rank). fixed_rounds forces exactly N rounds with no
     convergence check (deterministic partial result for oracle parity).
 
-    ``engine``: 'auto' takes the RamTable-style in-memory kernel
-    (ram.py — the reference's hot-graph mode, RamTable.java) when the
-    edge count fits, else the distributed loop below; 'ram'/'dist'
-    force a path. Both paths are oracle-gated in the driver harness."""
-    if engine == "ram" and max_degree != NO_LIMIT:
-        # never SILENTLY switch engines on a forced 'ram' (review r06
-        # — the docstring promises 'ram'/'dist' force a path)
-        raise ValueError(
-            "page_rank: engine='ram' does not support max_degree — "
-            "use engine='dist' or drop the degree cap")
-    if engine != "dist" and max_degree == NO_LIMIT:
-        from incubator_hugegraph_spark.ram import ram_fits, ram_page_rank
-        if engine == "ram" or ram_fits(graph):
-            return ram_page_rank(graph, alpha, max_times, precision,
+    ``engine``: 'auto', 'ram' or 'dist', decided by ``ram.takes_ram``
+    (a degree cap is not servable by the RAM kernel). Both tiers are
+    oracle-gated in the driver harness."""
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT):
+        return ram.ram_page_rank(graph, alpha, max_times, precision,
                                  direction, labels, fixed_rounds)
     e0 = graph.adj(direction, labels).select("src", "dst")
     e0 = cap_degree(e0, max_degree, order_cols=("dst",))
@@ -167,7 +166,7 @@ def page_rank(graph: PropertyGraph, alpha: float = 0.15,
     # driver heap; raise it only with more driver memory. Past the
     # limit (billions of vertices at 100 TB) it falls back to the
     # shuffle join Catalyst plans; the loop shape is identical.
-    bcast = n <= BROADCAST_VERTEX_LIMIT
+    bcast = vertex_broadcast(graph)
 
     def _r(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if bcast else df
@@ -183,7 +182,7 @@ def page_rank(graph: PropertyGraph, alpha: float = 0.15,
     # rides the RANK VECTOR, so the per-round message join needs only
     # ONE broadcast (vector ⊗ edges). `old` (the convergence rider,
     # see below) starts undefined: no previous round exists.
-    e = balanced(encode_edges(graph, e0, bcast), "dst").persist()
+    e = balanced(encode_edges(graph, e0), "dst").persist()
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ranks = checkpointed(
         idx.select(F.col("vi").alias("id"))
@@ -259,8 +258,7 @@ def page_rank(graph: PropertyGraph, alpha: float = 0.15,
     # not from e — safe to release the cached edge table and the last
     # round's (now re-materialized) vector. The decode is one join
     # against the index; ranks themselves are untouched doubles.
-    out = checkpointed(decode_ids(graph, ranks.select("id", "rank"), bcast,
-                                  "id"))
+    out = checkpointed(decode_ids(graph, ranks.select("id", "rank"), "id"))
     release_ckpt(prev)
     e.unpersist()
     return out

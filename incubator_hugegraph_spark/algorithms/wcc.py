@@ -22,11 +22,11 @@ from pyspark.sql import functions as F
 
 from contextlib import nullcontext
 
+from incubator_hugegraph_spark import ram
 from incubator_hugegraph_spark.graph import (
-    BOTH, PropertyGraph, balanced, checkpointed, iterate_hygiene, no_aqe,
-    release_ckpt)
+    BOTH, PropertyGraph, balanced, checkpointed, no_aqe, release_ckpt)
 from incubator_hugegraph_spark.algorithms.pagerank import (
-    BROADCAST_VERTEX_LIMIT, decode_ids, encode_edges, indexed)
+    decode_ids, encode_edges, indexed, vertex_broadcast)
 
 
 def wcc(graph: PropertyGraph, labels: list[str] | None = None,
@@ -34,20 +34,17 @@ def wcc(graph: PropertyGraph, labels: list[str] | None = None,
         engine: str = "auto") -> DataFrame:
     """Returns (id, component) — component = min reachable vertex id.
 
-    ``engine``: 'auto' takes the RamTable-style in-memory kernel
-    (ram.py) when the edge count fits AND the caller wants the
-    fixpoint (fixed_rounds pins per-round semantics only the
-    distributed loop has); 'ram'/'dist' force a path."""
-    if engine != "dist" and fixed_rounds is None:
-        from incubator_hugegraph_spark.ram import ram_fits, ram_wcc
-        if engine == "ram" or ram_fits(graph):
-            return ram_wcc(graph, labels)
-    idx, n = indexed(graph)
-    # component vector is O(|V|): broadcast it while it fits (same
-    # adaptive rule as page_rank — see BROADCAST_VERTEX_LIMIT there
-    # for the driver-heap sizing rationale) so each round's
+    ``engine``: 'auto', 'ram' or 'dist', decided by ``ram.takes_ram``;
+    the RAM kernel serves ``fixed_rounds`` with the same per-round
+    states as the loop below."""
+    if ram.takes_ram(graph, engine):
+        return ram.ram_wcc(graph, labels, fixed_rounds)
+    idx, _ = indexed(graph)
+    # component vector is O(|V|): broadcast it under the vertex gate
+    # (same adaptive rule as page_rank — see BROADCAST_VERTEX_LIMIT
+    # there for the driver-heap sizing rationale) so each round's
     # propagation is a map-side join; shuffle joins past the limit
-    bcast = n <= BROADCAST_VERTEX_LIMIT
+    bcast = vertex_broadcast(graph)
 
     def _b(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if bcast else df
@@ -63,7 +60,7 @@ def wcc(graph: PropertyGraph, labels: list[str] | None = None,
     # distribution) — one O(|E|) exchange where distinct().
     # repartition(src) paid two.
     adj = (balanced(encode_edges(
-        graph, graph.adj(BOTH, labels).select("src", "dst"), bcast), "src")
+        graph, graph.adj(BOTH, labels).select("src", "dst")), "src")
         .dropDuplicates(["src", "dst"]).persist())
     adj.count()
     comp = checkpointed(
@@ -72,11 +69,12 @@ def wcc(graph: PropertyGraph, labels: list[str] | None = None,
     # one JOB per round (broadcast path): lazy checkpoint + the
     # full-vector fixpoint agg as the materializing action, AQE
     # suspended since the round plan's only exchanges are broadcasts
-    # (see graph.no_aqe / page_rank for the measured rationale)
+    # (see graph.no_aqe / page_rank for the measured rationale).
+    # fixed_rounds runs the same rounds and never stops early.
     converged = fixed_rounds is not None
     with no_aqe(graph.spark) if bcast else nullcontext():
         prev = comp
-        for k in range(rounds):
+        for _ in range(rounds):
             nbr_min = (adj.join(_b(comp), on=adj.dst == comp.id)
                        .groupBy("src")
                        .agg(F.min("component").alias("nbr_comp"))
@@ -100,32 +98,22 @@ def wcc(graph: PropertyGraph, labels: list[str] | None = None,
                    .select("id", "old",
                            F.least("old", F.coalesce("nbr_comp", "old"))
                            .alias("component")))
-            if fixed_rounds is None:
-                # lazy checkpoint: the delta agg scans EVERY partition
-                # (a limit-probe would materialize only some), so the
-                # round's compute runs exactly once, in this one job
-                new = checkpointed(new, eager=False)
-                delta = new.agg(F.sum(
-                    (F.col("component") != F.col("old")).cast("int"))
-                    .alias("d")).collect()[0]["d"]
-                comp = new.select("id", "component")
-                # round k materialized — free round k-1's blocks now
-                # (see page_rank: keeps long loops flat, no residue)
-                release_ckpt(prev)
-                prev = new
-                if not delta:
-                    converged = True
-                    break
-            else:
-                comp = iterate_hygiene(new.select("id", "component"),
-                                       k + 1, every=3)
-                # only when this round MATERIALIZED a new checkpoint is
-                # the previous one dead (non-checkpoint rounds still
-                # derive lazily from prev)
-                if getattr(comp, "_ckpt_jrdd", None) is not None:
-                    release_ckpt(prev)
-                    prev = comp
-    comp = checkpointed(decode_ids(graph, comp, bcast, "id", "component"))
+            # lazy checkpoint: the delta agg scans EVERY partition
+            # (a limit-probe would materialize only some), so the
+            # round's compute runs exactly once, in this one job
+            new = checkpointed(new, eager=False)
+            delta = new.agg(F.sum(
+                (F.col("component") != F.col("old")).cast("int"))
+                .alias("d")).collect()[0]["d"]
+            comp = new.select("id", "component")
+            # round k materialized — free round k-1's blocks now
+            # (see page_rank: keeps long loops flat, no residue)
+            release_ckpt(prev)
+            prev = new
+            if fixed_rounds is None and not delta:
+                converged = True
+                break
+    comp = checkpointed(decode_ids(graph, comp, "id", "component"))
     release_ckpt(prev)
     adj.unpersist()
     if not converged:

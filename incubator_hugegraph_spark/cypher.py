@@ -2601,7 +2601,7 @@ class CypherEngine:
 
     def _apply_create(self, df: DataFrame | None, c: _Create) -> DataFrame:
         from incubator_hugegraph_spark.operators.mutate import (
-            upsert_edges, upsert_vertices)
+            _edge_key, upsert_edges, upsert_vertices)
         g = self.graph
         spark = g.spark
         sch = g.schema
@@ -2738,9 +2738,8 @@ class CypherEngine:
             # summary despite having inserted edges; the MERGE rel
             # branch already reports them)
             ekeys = reduce(lambda a, b: a.unionByName(b), [
-                b.select(F.concat_ws(">", "src", "label",
-                                     "sort_values", "dst").alias("id"),
-                         F.col("label")) for b in ebatches]) \
+                b.select(_edge_key(b).alias("id"), F.col("label"))
+                for b in ebatches]) \
                 .dropDuplicates(["id"])
             summary = summary.unionByName(ekeys)
         self._write_summary = summary
@@ -2802,7 +2801,7 @@ class CypherEngine:
 
         if c.rels and not unbound and df is not None:
             from incubator_hugegraph_spark.operators.mutate import (
-                upsert_edges)
+                _edge_key, upsert_edges)
             created = []
             rel_missing = []
             for rel, rp in zip(c.rels, c.rel_props):
@@ -2834,8 +2833,9 @@ class CypherEngine:
                     on=["src", "dst"], how="left_anti")
                 g.edges = upsert_edges(g.edges, missing)
                 g.edge_views.pop(rel.label, None)
+                # the stored EdgeId (sort_values "" keeps its field)
                 created.append(missing.select(
-                    F.concat_ws(">", "src", "label", "dst").alias("id"),
+                    _edge_key(missing).alias("id"),
                     F.lit("edge").alias("label")))
                 # bind the rel variable (all pattern edges now exist,
                 # matched or created, with sort_values "") so ON

@@ -461,12 +461,13 @@ def no_aqe(spark):
         spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
-def iterate_hygiene(df: DataFrame, round_no: int, every: int = 1) -> DataFrame:
-    """Cut lineage every ``every`` rounds of an iterative loop —
-    without this, k-round join loops build O(k)-deep plans that blow
-    up Catalyst analysis time and executor stacks at scale.
+def iterate_hygiene(df: DataFrame, round_no: int) -> DataFrame:
+    """Cut lineage after every round of an iterative loop (round 0 is
+    the seed and is left alone) — without this, k-round join loops
+    build O(k)-deep plans that blow up Catalyst analysis time and
+    executor stacks at scale.
 
-    Default every=1 (measured, round 3): in a BFS-style loop the
+    Every round (measured, round 3): in a BFS-style loop the
     round-k frontier is consumed MORE THAN ONCE downstream (next
     round's expansion broadcast + the visited/accumulator union +
     the final action), and Spark re-executes the un-materialized
@@ -475,7 +476,7 @@ def iterate_hygiene(df: DataFrame, round_no: int, every: int = 1) -> DataFrame:
     once; the per-round materialization is frontier-sized (bounded by
     the reference's capacity guard) while the recompute it removes is
     O(rounds × full-plan). Halved BFS wall-clock at sf0.1."""
-    if round_no > 0 and round_no % every == 0:
+    if round_no > 0:
         return checkpointed(df)
     return df
 

@@ -34,6 +34,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from incubator_hugegraph_spark import ram
 from incubator_hugegraph_spark.graph import (
     BOTH,
     NO_LIMIT,
@@ -146,15 +147,14 @@ def bfs(graph: PropertyGraph, source_ids: list[str], depth: int,
     """Multi-source BFS → (id, dist), dist = first-reach layer
     (0 for sources). Global dedup ⇒ 'nearest' semantics.
 
-    ``engine``: 'auto' serves hot graphs from the RamTable-style CSR
-    (ram.py) when no degree guard is in play — the reference answers
-    these same traversals from RamTable when loaded; 'dist' forces
-    the distributed frontier loop (the 100 TB path)."""
-    if (engine != "dist" and max_degree == NO_LIMIT
-            and skip_degree == NO_LIMIT):
-        from incubator_hugegraph_spark.ram import ram_bfs, ram_fits
-        if engine == "ram" or ram_fits(graph):
-            return ram_bfs(graph, source_ids, depth, direction, labels,
+    ``engine``: the RamTable-style CSR (ram.py) or the distributed
+    frontier loop (the 100 TB path), decided by ``ram.takes_ram`` as
+    for every operator of this module; a degree cap or skip_degree is
+    dist-only. The reference answers these same traversals from
+    RamTable when loaded."""
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT
+                     and skip_degree == NO_LIMIT):
+        return ram.ram_bfs(graph, source_ids, depth, direction, labels,
                            capacity)
     adj = loop_adj(graph, direction, labels, max_degree, depth,
                    skip_degree)
@@ -214,13 +214,17 @@ def kout(graph: PropertyGraph, source: str, depth: int,
     nearest=True → not reachable by any shorter path (BFS layers with
     global dedup, KoutTraverser.java:43-111); nearest=False → the raw
     k-th expansion, deduped within the layer only (:114-147).
-    Returns (id).
+    Returns (id). ``engine`` as for ``bfs``; nearest=False is
+    dist-only (no RAM kernel runs the raw expansion).
     """
     if nearest:
         out = (bfs(graph, [source], depth, direction, labels, max_degree,
                    skip_degree, capacity, engine=engine)
                .filter(F.col("dist") == depth).select("id"))
     else:
+        # only validates engine: 'ram' raises here rather than
+        # silently running the loop below
+        ram.takes_ram(graph, engine, servable=False)
         adj = loop_adj(graph, direction, labels, max_degree, depth,
                        skip_degree)
         frontier = sources_df(graph, [source])
@@ -316,12 +320,9 @@ def customized_kout(graph: PropertyGraph, source: str,
     per-step direction/labels/edge-property filters, depth =
     len(steps). nearest=True subtracts everything reached earlier.
     Returns (id)."""
-    if engine != "dist" and all(
-            st.get("max_degree", NO_LIMIT) == NO_LIMIT for st in steps):
-        from incubator_hugegraph_spark.ram import (ram_customized_kout,
-                                                   ram_fits)
-        if engine == "ram" or ram_fits(graph):
-            return ram_customized_kout(graph, source, steps, nearest,
+    if ram.takes_ram(graph, engine, all(
+            st.get("max_degree", NO_LIMIT) == NO_LIMIT for st in steps)):
+        return ram.ram_customized_kout(graph, source, steps, nearest,
                                        limit)
     frontier = sources_df(graph, [source])
     visited = frontier
@@ -345,12 +346,9 @@ def customized_kneighbor(graph: PropertyGraph, source: str,
     """customizedKneighbor (KneighborTraverser.java:74-…, KneighborAPI
     POST): every vertex reached within the step sequence, source
     excluded. Returns (id, dist) — dist = first-reach step ordinal."""
-    if engine != "dist" and all(
-            st.get("max_degree", NO_LIMIT) == NO_LIMIT for st in steps):
-        from incubator_hugegraph_spark.ram import (
-            ram_customized_kneighbor, ram_fits)
-        if engine == "ram" or ram_fits(graph):
-            return ram_customized_kneighbor(graph, source, steps, limit)
+    if ram.takes_ram(graph, engine, all(
+            st.get("max_degree", NO_LIMIT) == NO_LIMIT for st in steps)):
+        return ram.ram_customized_kneighbor(graph, source, steps, limit)
     frontier = sources_df(graph, [source])
     visited = frontier.withColumn("dist", F.lit(0))
     for i, st in enumerate(steps):
@@ -411,11 +409,8 @@ def kneighbor_paths(graph: PropertyGraph, source: str, depth: int,
     parent chain; we return the lexicographically smallest path per
     vertex (deterministic deviation, SURVEY §7.4#4). Returns
     (id, path, dist)."""
-    if engine != "dist" and max_degree == NO_LIMIT:
-        from incubator_hugegraph_spark.ram import (ram_fits,
-                                                   ram_kneighbor_paths)
-        if engine == "ram" or ram_fits(graph):
-            return ram_kneighbor_paths(graph, source, depth, direction,
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT):
+        return ram.ram_kneighbor_paths(graph, source, depth, direction,
                                        labels, limit)
     adj = loop_adj(graph, direction, labels, max_degree, depth)
     sep = ">"

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from incubator_hugegraph_spark import ram
 from incubator_hugegraph_spark.graph import BOTH, NO_LIMIT, OUT, PropertyGraph
 from incubator_hugegraph_spark.operators.bfs import prepared_adj
 
@@ -32,12 +33,10 @@ def same_neighbors(graph: PropertyGraph, a: str, b: str,
                    limit: int = NO_LIMIT,
                    engine: str = "auto") -> DataFrame:
     """Common neighbors of two vertices (SameNeighborTraverser.java:38-68).
-    Returns (id)."""
-    if engine != "dist" and max_degree == NO_LIMIT:
-        from incubator_hugegraph_spark.ram import (ram_fits,
-                                                   ram_same_neighbors)
-        if engine == "ram" or ram_fits(graph):
-            return ram_same_neighbors(graph, a, b, direction, labels,
+    Returns (id). ``engine``: see ``ram.takes_ram`` (a degree cap is
+    dist-only), as for every operator of this module."""
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT):
+        return ram.ram_same_neighbors(graph, a, b, direction, labels,
                                       limit)
     common = (neighbors(graph, a, direction, labels, max_degree)
               .intersect(neighbors(graph, b, direction, labels, max_degree))
@@ -55,10 +54,8 @@ def jaccard_similarity(graph: PropertyGraph, a: str, b: str,
     """Pair-mode Jaccard |A∩B|/|A∪B| of neighbor sets
     (JaccardSimilarTraverser.jaccardSimilarity :48-79).
     Returns one row (jaccard double, rounded 6)."""
-    if engine != "dist" and max_degree == NO_LIMIT:
-        from incubator_hugegraph_spark.ram import ram_fits, ram_pair_scores
-        if engine == "ram" or ram_fits(graph):
-            return ram_pair_scores(graph, a, b, direction, labels,
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT):
+        return ram.ram_pair_scores(graph, a, b, direction, labels,
                                    "jaccard")
     na = neighbors(graph, a, direction, labels, max_degree)
     nb = neighbors(graph, b, direction, labels, max_degree)
@@ -72,8 +69,10 @@ def _common_with_degree(graph: PropertyGraph, a: str, b: str,
                         direction: str, labels: list[str] | None,
                         max_degree: int) -> DataFrame:
     """(id, degree) of each common neighbor z of a and b; degree is
-    z's degree in the same direction/labels."""
-    common = same_neighbors(graph, a, b, direction, labels, max_degree)
+    z's degree in the same direction/labels. Reached only on the
+    distributed tier, so the common set stays there too."""
+    common = same_neighbors(graph, a, b, direction, labels, max_degree,
+                            engine="dist")
     deg = graph.degrees(direction, labels)
     # broadcast the TINY side: `common` is one pair's shared-neighbor
     # set, `deg` is O(|V|) — shipping every vertex's degree to every
@@ -88,10 +87,8 @@ def adamic_adar(graph: PropertyGraph, a: str, b: str,
                 engine: str = "auto") -> DataFrame:
     """Adamic-Adar Σ_z 1/ln(deg(z)) over common neighbors z
     (PredictionTraverser.adamicAdar :36-52). Returns (score)."""
-    if engine != "dist" and max_degree == NO_LIMIT:
-        from incubator_hugegraph_spark.ram import ram_fits, ram_pair_scores
-        if engine == "ram" or ram_fits(graph):
-            return ram_pair_scores(graph, a, b, direction, labels,
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT):
+        return ram.ram_pair_scores(graph, a, b, direction, labels,
                                    "adamic")
     cz = _common_with_degree(graph, a, b, direction, labels, max_degree)
     # deg=1 → ln(deg)=0 → ANSI DIVIDE_BY_ZERO would abort the job
@@ -110,10 +107,8 @@ def resource_allocation(graph: PropertyGraph, a: str, b: str,
                         engine: str = "auto") -> DataFrame:
     """Resource-Allocation Σ_z 1/deg(z)
     (PredictionTraverser.resourceAllocation :53-…). Returns (score)."""
-    if engine != "dist" and max_degree == NO_LIMIT:
-        from incubator_hugegraph_spark.ram import ram_fits, ram_pair_scores
-        if engine == "ram" or ram_fits(graph):
-            return ram_pair_scores(graph, a, b, direction, labels, "ra")
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT):
+        return ram.ram_pair_scores(graph, a, b, direction, labels, "ra")
     cz = _common_with_degree(graph, a, b, direction, labels, max_degree)
     # degree ≥ 1 by construction (it comes from a groupBy count);
     # only the empty-common-set NULL needs the 0.0 coalesce
@@ -170,13 +165,11 @@ def count_steps(graph: PropertyGraph, source: str,
 
     ``dedup`` → distinct final arrivals (legacy flag, kept for the
     simple distinct-count form)."""
-    if engine != "dist" and all(
+    if ram.takes_ram(graph, engine, all(
             st.get("max_degree", NO_LIMIT) == NO_LIMIT
             and st.get("skip_degree", NO_LIMIT) == NO_LIMIT
-            for st in steps):
-        from incubator_hugegraph_spark.ram import ram_count_steps, ram_fits
-        if engine == "ram" or ram_fits(graph):
-            return ram_count_steps(graph, source, steps, dedup,
+            for st in steps)):
+        return ram.ram_count_steps(graph, source, steps, dedup,
                                    dedup_size, contains_traversed)
     spark = graph.spark
     n = len(steps)
@@ -241,11 +234,8 @@ def same_neighbors_multi(graph: PropertyGraph, ids: list[str],
     N-way intersect chain. Returns (id)."""
     if len(set(ids)) < 2:
         raise ValueError("vertex_list size can't be less than 2")
-    if engine != "dist" and max_degree == NO_LIMIT:
-        from incubator_hugegraph_spark.ram import (
-            ram_fits, ram_same_neighbors_multi)
-        if engine == "ram" or ram_fits(graph):
-            return ram_same_neighbors_multi(graph, ids, direction,
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT):
+        return ram.ram_same_neighbors_multi(graph, ids, direction,
                                             labels, limit)
     uniq = sorted(set(ids))
     adj = prepared_adj(graph, direction, labels, max_degree)

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from incubator_hugegraph_spark import ram
 from incubator_hugegraph_spark.graph import (
     BOTH,
     NO_LIMIT,
@@ -82,15 +83,18 @@ def paths(graph: PropertyGraph, source: str, target: str, max_depth: int,
     (PathsTraverser.java:38-94). shortest_only → stop at the first
     depth that reaches target (allshortestpaths); first_only
     additionally keeps just the lexicographically smallest
-    (shortestpath). Returns (path, length)."""
-    if (engine != "dist" and max_degree == NO_LIMIT
-            and not shortest_only):
-        from incubator_hugegraph_spark.ram import ram_fits, ram_paths
-        if engine == "ram" or ram_fits(graph):
-            out = ram_paths(graph, source, target, max_depth, direction,
+    (shortestpath). Returns (path, length).
+
+    ``engine``: see ``ram.takes_ram``, as for every operator of this
+    module; a degree cap, ``shortest_only`` and a step ``max_degree``
+    are dist-only, and a kernel returning None (over its row budget)
+    hands over to the distributed loop."""
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT
+                     and not shortest_only):
+        out = ram.ram_paths(graph, source, target, max_depth, direction,
                             labels, limit)
-            if out is not None:
-                return out
+        if out is not None:
+            return out
     adj = loop_adj(graph, direction, labels, max_degree, max_depth)
     frontier = _seed(graph, [source])
     found: DataFrame | None = None
@@ -115,19 +119,6 @@ def paths(graph: PropertyGraph, source: str, target: str, max_depth: int,
     return found
 
 
-def _ram_shortest(graph, source, target, max_depth, direction, labels,
-                  max_degree, engine, first_only):
-    """Kernel dispatch shared by shortest_path/all_shortest_paths;
-    returns None when the distributed enumeration should run."""
-    if engine == "dist" or max_degree != NO_LIMIT:
-        return None
-    from incubator_hugegraph_spark.ram import ram_fits, ram_shortest_paths
-    if engine == "ram" or ram_fits(graph):
-        return ram_shortest_paths(graph, source, target, max_depth,
-                                  direction, labels, first_only)
-    return None
-
-
 def shortest_path(graph: PropertyGraph, source: str, target: str,
                   max_depth: int, direction: str = OUT,
                   labels: list[str] | None = None,
@@ -136,10 +127,11 @@ def shortest_path(graph: PropertyGraph, source: str, target: str,
                   engine: str = "auto") -> DataFrame:
     """One shortest path (ShortestPathTraverser.java:45-101);
     deterministic min-lexicographic pick. Returns (path, length)."""
-    out = _ram_shortest(graph, source, target, max_depth, direction,
-                        labels, max_degree, engine, True)
-    if out is not None:
-        return out
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT):
+        out = ram.ram_shortest_paths(graph, source, target, max_depth,
+                                     direction, labels, True)
+        if out is not None:
+            return out
     return paths(graph, source, target, max_depth, direction, labels,
                  max_degree, shortest_only=True, first_only=True)
 
@@ -150,10 +142,11 @@ def all_shortest_paths(graph: PropertyGraph, source: str, target: str,
                        max_degree: int = NO_LIMIT,
                        engine: str = "auto") -> DataFrame:
     """All shortest paths (ShortestPathTraverser.java:104-…)."""
-    out = _ram_shortest(graph, source, target, max_depth, direction,
-                        labels, max_degree, engine, False)
-    if out is not None:
-        return out
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT):
+        out = ram.ram_shortest_paths(graph, source, target, max_depth,
+                                     direction, labels, False)
+        if out is not None:
+            return out
     return paths(graph, source, target, max_depth, direction, labels,
                  max_degree, shortest_only=True)
 
@@ -170,13 +163,11 @@ def rays(graph: PropertyGraph, source: str, max_depth: int,
     when the depth budget exhausts. A path whose continuations are
     all on-path at a multi-edge vertex is dropped silently — the
     reference's behavior, reproduced exactly."""
-    if engine != "dist" and max_degree == NO_LIMIT:
-        from incubator_hugegraph_spark.ram import ram_fits, ram_rays
-        if engine == "ram" or ram_fits(graph):
-            out = ram_rays(graph, source, max_depth, direction, labels,
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT):
+        out = ram.ram_rays(graph, source, max_depth, direction, labels,
                            limit)
-            if out is not None:
-                return out
+        if out is not None:
+            return out
     adj = loop_adj(graph, direction, labels, max_degree, max_depth)
     # physical edge count per vertex (pre-dedup — uniqueEdge counts
     # edges, not distinct neighbors) + the single neighbor when deg=1
@@ -235,13 +226,11 @@ def rings(graph: PropertyGraph, source: str, max_depth: int,
     immediate backtrack source>X>source over a single physical edge
     is NOT a ring — it only counts when ≥2 physical edges connect the
     pair (hasMultiEdges, SubGraphTraverser.java:253-260)."""
-    if engine != "dist" and max_degree == NO_LIMIT:
-        from incubator_hugegraph_spark.ram import ram_fits, ram_rings
-        if engine == "ram" or ram_fits(graph):
-            out = ram_rings(graph, source, max_depth, direction, labels,
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT):
+        out = ram.ram_rings(graph, source, max_depth, direction, labels,
                             limit)
-            if out is not None:
-                return out
+        if out is not None:
+            return out
     adj = loop_adj(graph, direction, labels, max_degree, max_depth)
     frontier = _seed(graph, [source])
     out: DataFrame | None = None
@@ -287,15 +276,12 @@ def template_paths(graph: PropertyGraph, sources: list[str],
     max_degree, max_times} — a step may repeat 1..max_times times; a
     path matches if it consumes the whole template and ends in
     ``targets``. Returns (path, length)."""
-    if engine != "dist" and all(
-            st.get("max_degree", NO_LIMIT) == NO_LIMIT for st in steps):
-        from incubator_hugegraph_spark.ram import (ram_fits,
-                                                   ram_template_paths)
-        if engine == "ram" or ram_fits(graph):
-            out = ram_template_paths(graph, sources, targets, steps,
+    if ram.takes_ram(graph, engine, all(
+            st.get("max_degree", NO_LIMIT) == NO_LIMIT for st in steps)):
+        out = ram.ram_template_paths(graph, sources, targets, steps,
                                      limit)
-            if out is not None:
-                return out
+        if out is not None:
+            return out
     out: DataFrame | None = None
     seqs = _unroll_templates(steps)
     for seq in seqs:
@@ -349,15 +335,12 @@ def multi_node_shortest_path(graph: PropertyGraph, ids: list[str],
     min(path_{k-1}) + '>' + v = min over all level-k paths via any
     predecessor.
 
-    ``engine``: 'auto' serves hot graphs from the RamTable-style CSR
-    kernel (ram.py, ram_multi_node_shortest_path — bit-identical
-    min-lex paths) when no degree guard is in play; 'ram'/'dist'
-    force a path. Both engines share the driver oracle."""
-    if engine != "dist" and max_degree == NO_LIMIT:
-        from incubator_hugegraph_spark.ram import (
-            ram_fits, ram_multi_node_shortest_path)
-        if engine == "ram" or ram_fits(graph):
-            return ram_multi_node_shortest_path(graph, ids, max_depth,
+    ``engine``: see ``ram.takes_ram`` (a degree cap is dist-only);
+    the RAM tier (ram.ram_multi_node_shortest_path) returns
+    bit-identical min-lex paths, and both tiers share the driver
+    oracle."""
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT):
+        return ram.ram_multi_node_shortest_path(graph, ids, max_depth,
                                                 direction, labels)
     spark = graph.spark
     adj = loop_adj(graph, direction, labels, max_degree, max_depth)
@@ -432,13 +415,11 @@ def crosspoints(graph: PropertyGraph, source: str, target: str,
     length ≤ max_depth. Deviation (documented): combined paths must be
     simple (the reference only checks each half). Returns
     (crosspoint, path, length) ordered (length, path), limited."""
-    if engine != "dist" and max_degree == NO_LIMIT:
-        from incubator_hugegraph_spark.ram import ram_crosspoints, ram_fits
-        if engine == "ram" or ram_fits(graph):
-            out = ram_crosspoints(graph, source, target, max_depth,
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT):
+        out = ram.ram_crosspoints(graph, source, target, max_depth,
                                   direction, labels, limit)
-            if out is not None:
-                return out
+        if out is not None:
+            return out
     adj = loop_adj(graph, direction, labels, max_degree, max_depth)
 
     def levels(start: str, upto: int) -> list[DataFrame]:
@@ -529,14 +510,11 @@ def customized_paths(graph: PropertyGraph, sources: list[str],
     Step dict keys: direction ('OUT'|'IN'|'BOTH'), labels (list),
     weight_by (props key | None), default_weight (float), sample
     (int, -1 = all)."""
-    if engine != "dist":
-        from incubator_hugegraph_spark.ram import (ram_customized_paths,
-                                                   ram_fits)
-        if engine == "ram" or ram_fits(graph):
-            out = ram_customized_paths(graph, sources, steps,
+    if ram.takes_ram(graph, engine):
+        out = ram.ram_customized_paths(graph, sources, steps,
                                        sorted_by_weight, limit)
-            if out is not None:
-                return out
+        if out is not None:
+            return out
     from pyspark.sql.window import Window
     frontier = (_seed(graph, sources)
                 .withColumn("weight", F.lit(0.0)))
@@ -578,16 +556,13 @@ def customized_crosspoints(graph: PropertyGraph, sources: list[str],
     the result is empty. Returns (crosspoint) ordered by id.
 
     Pattern = list of step dicts (direction, labels, max_degree)."""
-    if engine != "dist" and all(
+    if ram.takes_ram(graph, engine, all(
             st.get("max_degree", NO_LIMIT) == NO_LIMIT
-            for pat in patterns for st in pat):
-        from incubator_hugegraph_spark.ram import (
-            ram_customized_crosspoints, ram_fits)
-        if engine == "ram" or ram_fits(graph):
-            out = ram_customized_crosspoints(graph, sources, patterns,
+            for pat in patterns for st in pat)):
+        out = ram.ram_customized_crosspoints(graph, sources, patterns,
                                              limit)
-            if out is not None:
-                return out
+        if out is not None:
+            return out
     spark = graph.spark
     ends: DataFrame | None = None
     for pattern in patterns:
@@ -637,14 +612,11 @@ def collection_paths(graph: PropertyGraph, sources: list[str],
     shortest (min-lex) path per (source, target) pair — the
     set-oriented equivalent of the reference's NearestTraverser
     first-reach dedup. Returns (source, target, path, length)."""
-    if engine != "dist" and max_degree == NO_LIMIT:
-        from incubator_hugegraph_spark.ram import (ram_collection_paths,
-                                                   ram_fits)
-        if engine == "ram" or ram_fits(graph):
-            out = ram_collection_paths(graph, sources, targets, max_depth,
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT):
+        out = ram.ram_collection_paths(graph, sources, targets, max_depth,
                                        direction, labels, nearest, limit)
-            if out is not None:
-                return out
+        if out is not None:
+            return out
     spark = graph.spark
     adj = loop_adj(graph, direction, labels, max_degree, max_depth)
     tdf = spark.createDataFrame([(t,) for t in targets], "t string")
@@ -698,15 +670,16 @@ def rings_detect(graph: PropertyGraph, max_depth: int,
     cycle is reported once, anchored at its minimum vertex (the
     reference dedups rings the same way via Path.ownedBy). One
     multi-source path-join loop — all anchors advance together.
-    Returns (path, length) with path = min>…>min."""
-    if engine == "ram" and max_degree == NO_LIMIT:
-        # explicit opt-in only: the ALL-SOURCES enumeration favors the
-        # distributed plan even on hot graphs (measured — the ring set
-        # itself is the output and dominates the work), so 'auto'
-        # stays distributed for this job
-        from incubator_hugegraph_spark.ram import ram_rings_detect
-        out = ram_rings_detect(graph, max_depth, direction, labels,
-                               limit)
+    Returns (path, length) with path = min>…>min.
+
+    The RAM tier is explicit opt-in only: the ALL-SOURCES enumeration
+    favors the distributed plan even on hot graphs (measured — the
+    ring set itself is the output and dominates the work), so 'auto'
+    stays distributed for this job."""
+    if engine != "auto" and ram.takes_ram(graph, engine,
+                                          max_degree == NO_LIMIT):
+        out = ram.ram_rings_detect(graph, max_depth, direction, labels,
+                                   limit)
         if out is not None:
             return out
     adj = loop_adj(graph, direction, labels, max_degree, max_depth)

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from incubator_hugegraph_spark import ram
 from incubator_hugegraph_spark.graph import (
     NO_LIMIT, OUT, PropertyGraph, checkpointed)
 from incubator_hugegraph_spark.operators.bfs import prepared_adj
@@ -44,12 +45,10 @@ def personal_rank(graph: PropertyGraph, source: str, label: str,
     """Returns (id, rank) after ``max_depth`` alternating rounds,
     with root + first-round adjacencies removed. Hot graphs run the
     RamTable vector kernel (ram.ram_personal_rank — identical
-    alternating recurrence)."""
-    if engine != "dist" and max_degree == NO_LIMIT:
-        from incubator_hugegraph_spark.ram import (ram_fits,
-                                                   ram_personal_rank)
-        if engine == "ram" or ram_fits(graph):
-            return ram_personal_rank(graph, source, label, alpha,
+    alternating recurrence; ``engine``: see ``ram.takes_ram``, a
+    degree cap is dist-only)."""
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT):
+        return ram.ram_personal_rank(graph, source, label, alpha,
                                      max_depth, with_label)
     el = graph.schema.edge_labels[label]
     if el.source_label == el.target_label:
@@ -104,13 +103,11 @@ def neighbor_rank(graph: PropertyGraph, source: str, steps: list[dict],
     produces layer t+1; same-/prev-layer neighbors absorb increments
     in place. Each step: {direction, labels, max_degree, top}. Hot
     graphs run the layered RamTable kernel (ram.ram_neighbor_rank)
-    when no step carries a degree cap."""
-    if engine != "dist" and all(
-            st.get("max_degree", NO_LIMIT) == NO_LIMIT for st in steps):
-        from incubator_hugegraph_spark.ram import (ram_fits,
-                                                   ram_neighbor_rank)
-        if engine == "ram" or ram_fits(graph):
-            return ram_neighbor_rank(graph, source, steps, alpha)
+    when no step carries a degree cap (``engine``: see
+    ``ram.takes_ram``)."""
+    if ram.takes_ram(graph, engine, all(
+            st.get("max_degree", NO_LIMIT) == NO_LIMIT for st in steps)):
+        return ram.ram_neighbor_rank(graph, source, steps, alpha)
     spark = graph.spark
     layers: list[DataFrame] = [
         spark.createDataFrame([(source, 1.0)], "id string, rank double")]

@@ -22,6 +22,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from incubator_hugegraph_spark import ram
+from incubator_hugegraph_spark.algorithms.pagerank import (
+    decode_ids, encode_edges, indexed)
 from incubator_hugegraph_spark.graph import (
     BOTH, NO_LIMIT, OUT, PropertyGraph, checkpointed)
 from incubator_hugegraph_spark.operators import bfs as _bfs
@@ -49,13 +52,11 @@ def jaccard_top(graph: PropertyGraph, source: str, top: int,
     (JaccardSimilarTraverser.jaccardSimilars :80-101). Candidates are
     the 2-hop neighborhood (any vertex sharing ≥1 neighbor). Returns
     (id, jaccard) — ties broken by id asc (deterministic deviation
-    from the reference's insertion order)."""
-    if engine != "dist" and max_degree == NO_LIMIT:
-        from incubator_hugegraph_spark.ram import (ram_fits,
-                                                   ram_jaccard_top_batch)
-        if engine == "ram" or ram_fits(graph):
-            return ram_jaccard_top_batch(
-                graph, [source], top, direction, labels).drop("source")
+    from the reference's insertion order). ``engine``: see
+    ``ram.takes_ram`` (a degree cap is dist-only)."""
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT):
+        return ram.ram_jaccard_top_batch(
+            graph, [source], top, direction, labels).drop("source")
     nbr = _nbrs(graph, direction, labels, max_degree)
     src_n = nbr.filter(F.col("src") == source) \
         .select(F.col("dst").alias("n"))
@@ -95,11 +96,8 @@ def jaccard_top_batch(graph: PropertyGraph, sources: list[str], top: int,
     # a repeated source would repeat its neighbor rows in src_n and
     # double every intersection count (jaccard = 2.0); first-seen order
     sources = list(dict.fromkeys(sources))
-    if engine != "dist" and max_degree == NO_LIMIT:
-        from incubator_hugegraph_spark.ram import (ram_fits,
-                                                   ram_jaccard_top_batch)
-        if engine == "ram" or ram_fits(graph):
-            return ram_jaccard_top_batch(graph, sources, top, direction,
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT):
+        return ram.ram_jaccard_top_batch(graph, sources, top, direction,
                                          labels)
     # §2.3 narrower types (r11 session 2): the neighbor table is keyed
     # by the graph's order-preserving vertex index, so the
@@ -113,13 +111,10 @@ def jaccard_top_batch(graph: PropertyGraph, sources: list[str], top: int,
     # build + encode broadcasts outweigh the probe win) and
     # triangle_count (+0.3-1 s, 3/3 quiet pairs — the oriented wedge
     # semi-join is already cheap per row); those keep string keys.
-    from incubator_hugegraph_spark.algorithms.pagerank import (
-        BROADCAST_VERTEX_LIMIT, decode_ids, encode_edges, indexed)
-    idx, n = indexed(graph)
-    bcast = n <= BROADCAST_VERTEX_LIMIT
+    idx, _ = indexed(graph)
     nbr = checkpointed(encode_edges(
         graph, prepared_adj(graph, direction, labels, max_degree)
-        .select("src", "dst"), bcast).distinct())
+        .select("src", "dst")).distinct())
     # sources joined to their encoded ids (the tiny source list is the
     # broadcast side); svi rides src_n so the candidate != source
     # filter compares the encoded ids
@@ -196,7 +191,7 @@ def jaccard_top_batch(graph: PropertyGraph, sources: list[str], top: int,
                   .drop("__r1", "__rn", "__salt"))
     # the ranked candidates' encoded ids back to vertex ids: one join
     # over ≤ sources·top rows
-    return decode_ids(graph, ranked, bcast, "id")
+    return decode_ids(graph, ranked, "id")
 
 
 def fusiform_similarity(graph: PropertyGraph,
@@ -218,15 +213,14 @@ def fusiform_similarity(graph: PropertyGraph,
     source s if they share ≥ alpha·|N(s)| neighbors; sources need
     ≥ min_neighbors neighbors and ≥ min_similars matches. Returns
     (source, similar, score) with score = |N(s)∩N(c)| / |N(s)|,
-    top-N per source by (score desc, id asc)."""
-    if (engine != "dist" and max_degree == NO_LIMIT
-            and group_property is None):
-        from incubator_hugegraph_spark.ram import (ram_fits,
-                                                   ram_fusiform_similarity)
-        if engine == "ram" or ram_fits(graph):
-            return ram_fusiform_similarity(
-                graph, source_label, direction, labels, min_neighbors,
-                alpha, min_similars, top)
+    top-N per source by (score desc, id asc). ``engine``: see
+    ``ram.takes_ram`` (a degree cap and ``group_property`` are
+    dist-only)."""
+    if ram.takes_ram(graph, engine, max_degree == NO_LIMIT
+                     and group_property is None):
+        return ram.ram_fusiform_similarity(
+            graph, source_label, direction, labels, min_neighbors,
+            alpha, min_similars, top)
     prefix = source_label + "!"
     # Both ends of a fusiform match carry the source label, so the
     # prefix filter is applied BEFORE the distinct (it reaches the

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from incubator_hugegraph_spark import ram
 from incubator_hugegraph_spark.graph import NO_LIMIT, PropertyGraph, iterate_hygiene
 
 
@@ -56,12 +57,11 @@ def sssp(graph: PropertyGraph, source: str, weighted_edges: DataFrame,
     many relaxations (deterministic partial result, used for
     SQL-oracle parity). Returns (id, dist[, parent]) — parent is the
     min-id predecessor on a best path. Hot graphs relax in the
-    RamTable kernel (ram.ram_sssp — identical synchronous recurrence).
+    RamTable kernel (ram.ram_sssp — identical synchronous recurrence;
+    ``engine``: see ``ram.takes_ram``).
     """
-    if engine != "dist":
-        from incubator_hugegraph_spark.ram import ram_fits, ram_sssp
-        if engine == "ram" or ram_fits(graph):
-            return ram_sssp(graph, source, weighted_edges, rounds,
+    if ram.takes_ram(graph, engine):
+        return ram.ram_sssp(graph, source, weighted_edges, rounds,
                             with_parent)
     spark = graph.spark
     e = weighted_edges.select("src", "dst", F.col("weight").cast("double"))

@@ -61,6 +61,43 @@ def ram_fits(graph: PropertyGraph) -> bool:
                          graph.edges.count) <= RAM_EDGE_LIMIT
 
 
+def takes_ram(graph: PropertyGraph, engine: str,
+              servable: bool = True) -> bool:
+    """The one tier decision of every dual-engine operator: True runs
+    the operator's RAM kernel, False its distributed loop.
+
+    - ``engine='dist'`` → False.
+    - ``servable`` is False when the call carries an argument the
+      kernels cannot serve (a degree cap, ``skip_degree``,
+      ``shortest_only``, a step ``max_degree``, …): ``'ram'`` raises
+      ``ValueError`` instead of switching tiers silently, ``'auto'``
+      → False without counting edges (a default REST read, capped at
+      10000, never pays the count).
+    - otherwise ``'ram'`` → True and ``'auto'`` → ``ram_fits(graph)``.
+    - any other ``engine`` raises ``ValueError``.
+
+    Two rules stay with the callers. A kernel may still decline at run
+    time, as a driver-memory guard rather than an argument limit: the
+    path-enumeration kernels return None past their row budget and the
+    wedge kernels raise MemoryError; the call then hands over to the
+    distributed loop under 'auto' and 'ram' alike. ``rings_detect``
+    keeps 'auto' on the distributed loop (its all-sources enumeration
+    favours it even on hot graphs)."""
+    if engine not in ("auto", "ram", "dist"):
+        raise ValueError(
+            f"engine must be 'auto', 'ram' or 'dist', not {engine!r}")
+    if engine == "dist":
+        return False
+    if not servable:
+        if engine == "ram":
+            raise ValueError(
+                "engine='ram' cannot serve an argument of this call that "
+                "only the distributed loop supports (a degree cap, "
+                "skip_degree, …) — use engine='dist' or drop it")
+        return False
+    return engine == "ram" or ram_fits(graph)
+
+
 def _vindex(graph: PropertyGraph):
     """(ids, id→position index): vertex ids sorted lexicographically,
     collected once per graph."""
@@ -148,26 +185,28 @@ def ram_page_rank(graph: PropertyGraph, alpha: float = 0.15,
         pd.DataFrame({"id": ids, "rank": rank}))
 
 
-def ram_wcc(graph: PropertyGraph,
-            labels: list[str] | None = None) -> DataFrame:
-    """Connected components to FIXPOINT: component = lexicographic min
-    reachable id (same contract as algorithms/wcc.py — min-label
-    propagation; path-halving added since only the fixpoint is
-    exposed, not per-round states)."""
+def ram_wcc(graph: PropertyGraph, labels: list[str] | None = None,
+            fixed_rounds: int | None = None) -> DataFrame:
+    """Connected components: component = lexicographic min reachable
+    id (same contract as algorithms/wcc.py — min-label propagation).
+    To FIXPOINT by default, with path halving since only the fixpoint
+    is exposed; ``fixed_rounds`` runs exactly that many rounds of
+    plain propagation, the distributed loop's per-round states."""
     ids, src, dst = _index_edges(graph, BOTH, labels)
-    n = len(ids)
-    comp = np.arange(n)
-    while True:
-        nbr = comp.copy()
+    comp = np.arange(len(ids))
+    k = 0
+    while fixed_rounds is None or k < fixed_rounds:
+        k += 1
         # min over neighbors' labels (BOTH adjacency already holds
         # each edge in both orientations)
-        np.minimum.at(nbr, src, comp[dst])
-        new = np.minimum(comp, nbr)
-        # path halving: label of my label — pure acceleration, the
-        # fixpoint (min over the component) is unchanged
-        new = np.minimum(new, new[new])
-        if np.array_equal(new, comp):
-            break
+        new = comp.copy()
+        np.minimum.at(new, src, comp[dst])
+        if fixed_rounds is None:
+            # path halving: label of my label — pure acceleration, the
+            # fixpoint (min over the component) is unchanged
+            new = np.minimum(new, new[new])
+            if np.array_equal(new, comp):
+                break
         comp = new
     import pandas as pd
     return graph.spark.createDataFrame(

@@ -53,7 +53,7 @@ def test_wcc_int_tier_exact_across_tiers(graph, monkeypatch):
     kernel, (b) the fixed-rounds loop, and (c) the shuffle fixpoint
     tier (broadcast gate forced off)."""
     import sys
-    wccmod = sys.modules["incubator_hugegraph_spark.algorithms.wcc"]
+    prmod = sys.modules["incubator_hugegraph_spark.algorithms.pagerank"]
 
     def exact(a, b):
         j = (a.withColumnRenamed("component", "ca")
@@ -63,8 +63,9 @@ def test_wcc_int_tier_exact_across_tiers(graph, monkeypatch):
 
     wd = wcc(graph, engine="dist")          # broadcast tier, fixpoint
     exact(wd, wcc(graph, engine="ram"))
-    exact(wd, wcc(graph, fixed_rounds=8))   # broadcast tier, 8 rounds
-    monkeypatch.setattr(wccmod, "BROADCAST_VERTEX_LIMIT", 0)
+    exact(wd, wcc(graph, fixed_rounds=8,
+                  engine="dist"))           # broadcast tier, 8 rounds
+    monkeypatch.setattr(prmod, "BROADCAST_VERTEX_LIMIT", 0)
     exact(wd, wcc(graph, engine="dist"))    # shuffle tier, fixpoint
 
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import pytest
 
+from incubator_hugegraph_spark import rest
 from incubator_hugegraph_spark.cypher import cypher
 from incubator_hugegraph_spark.graph import PropertyGraph
 from incubator_hugegraph_spark.schema import (EdgeLabel, GraphSchema,
@@ -260,3 +261,14 @@ def test_merge_on_set_node_only_allowed_on_sort_keyed_label(rgraph):
                    "ON MATCH SET a.flag = '2'")
     assert rgraph.vertices.filter("id = 'person!marko'") \
         .head().props["flag"] == "1"
+
+
+def test_merge_summary_edge_id_resolves(rgraph):
+    """The id a relationship MERGE reports is the stored EdgeId: the
+    element CRUD surface finds the created edge under it."""
+    rows = cypher(rgraph, "MATCH (a:person {name:'josh'}), "
+                          "(b:person {name:'vadas'}) "
+                          "MERGE (a)-[r:knows]->(b)").collect()
+    assert [r.label for r in rows] == ["edge"]
+    got = rest.execute_graph_crud(rgraph, "GET", f"edges/{rows[0].id}")
+    assert got.count() == 1

@@ -77,9 +77,10 @@ def test_wcc_vector_shuffle_fallback(graph, monkeypatch):
     # the module on `import pkg.algorithms.wcc as m`
     wcc_mod = importlib.import_module(
         "incubator_hugegraph_spark.algorithms.wcc")
+    import incubator_hugegraph_spark.algorithms.pagerank as pr_mod
     want = sorted(tuple(r) for r in
                   wcc_mod.wcc(graph, engine="dist").collect())
-    monkeypatch.setattr(wcc_mod, "BROADCAST_VERTEX_LIMIT", 0)
+    monkeypatch.setattr(pr_mod, "BROADCAST_VERTEX_LIMIT", 0)
     got = sorted(tuple(r) for r in
                  wcc_mod.wcc(graph, engine="dist").collect())
     assert got == want

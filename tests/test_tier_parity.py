@@ -15,7 +15,6 @@ from incubator_hugegraph_spark.operators.similarity import jaccard_top_batch
 
 # the package re-exports the functions under the module names
 prmod = importlib.import_module("incubator_hugegraph_spark.algorithms.pagerank")
-wccmod = importlib.import_module("incubator_hugegraph_spark.algorithms.wcc")
 
 V_SCHEMA = "id string, label string, props map<string,string>, " \
            "expired_at timestamp"
@@ -58,13 +57,12 @@ def _rows(df, digits=None):
 
 def _tiers(monkeypatch):
     """(name, engine) per tier; entering the shuffle tier patches the
-    vertex gate to 0 in both modules that read it."""
+    vertex gate to 0."""
     limit = prmod.BROADCAST_VERTEX_LIMIT
     for name, engine, gate in [("ram", "ram", limit),
                                ("dist-broadcast", "dist", limit),
                                ("dist-shuffle", "dist", 0)]:
         monkeypatch.setattr(prmod, "BROADCAST_VERTEX_LIMIT", gate)
-        monkeypatch.setattr(wccmod, "BROADCAST_VERTEX_LIMIT", gate)
         yield name, engine
 
 
