@@ -2337,9 +2337,11 @@ def _wcc_sql(rounds: int) -> str:
 @_q("wcc", _wcc_sql(8))
 def wcc_q(spark, sf_dir):
     """weak_connected_component (comm/WeakConnectedComponent.java),
-    min-id propagation, fixed 8 rounds for oracle parity."""
+    min-id propagation, fixed 8 rounds for oracle parity. Pinned to
+    the DISTRIBUTED loop (as `page_rank` is) — under 'auto' sf0.01
+    fits the RAM tier, which `wcc_ram` already gates."""
     from incubator_hugegraph_spark.algorithms.wcc import wcc
-    return wcc(_graph(spark, sf_dir), fixed_rounds=8)
+    return wcc(_graph(spark, sf_dir), fixed_rounds=8, engine="dist")
 
 
 @_q("wcc_ram", _wcc_sql(8))

@@ -189,9 +189,9 @@ def ram_wcc(graph: PropertyGraph, labels: list[str] | None = None,
             fixed_rounds: int | None = None) -> DataFrame:
     """Connected components: component = lexicographic min reachable
     id (same contract as algorithms/wcc.py — min-label propagation).
-    To FIXPOINT by default, with path halving since only the fixpoint
-    is exposed; ``fixed_rounds`` runs exactly that many rounds of
-    plain propagation, the distributed loop's per-round states."""
+    To FIXPOINT by default; ``fixed_rounds`` runs exactly that many
+    rounds. Each round is the distributed loop's round, so both tiers
+    pass through the same per-round states."""
     ids, src, dst = _index_edges(graph, BOTH, labels)
     comp = np.arange(len(ids))
     k = 0
@@ -201,12 +201,8 @@ def ram_wcc(graph: PropertyGraph, labels: list[str] | None = None,
         # each edge in both orientations)
         new = comp.copy()
         np.minimum.at(new, src, comp[dst])
-        if fixed_rounds is None:
-            # path halving: label of my label — pure acceleration, the
-            # fixpoint (min over the component) is unchanged
-            new = np.minimum(new, new[new])
-            if np.array_equal(new, comp):
-                break
+        if fixed_rounds is None and np.array_equal(new, comp):
+            break
         comp = new
     import pandas as pd
     return graph.spark.createDataFrame(
